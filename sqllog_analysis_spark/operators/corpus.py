@@ -170,9 +170,12 @@ def repetition_metrics(
     - ``top_2gram_frac``  — occurrences of the most frequent 2-gram / all 2-grams
     - ``dup_3gram_frac``  — fraction of 3-gram occurrences whose gram repeats
 
-    ``max_tokens`` bounds the O(u·n) per-doc cost of the in-array
-    frequency counts so a pathological 1 GB document can't stall an
-    executor core; repetition signals saturate long before 2000 tokens.
+    The gram counts sort each document's gram array once and fold over it
+    (``_max_multiplicity``, ``_repeated_occurrence_count``): O(n log n)
+    per document in its n grams.  ``max_tokens`` bounds n, and so the
+    size of every per-document array, so a pathological 1 GB document
+    can't stall an executor core or blow up its memory; repetition
+    signals saturate long before 2000 tokens.
     No shuffle, no Python — this is a projection even at 100 TB.
     """
     df = _spread_compact_input(df)

@@ -3,7 +3,7 @@
 Mirrors the reference CLI's flagship path (src/app.rs:105-182 →
 duckdb_impl.rs:796-936) restated Spark-first:
 
-  transcripts ──window(conv_id, turn_idx)──► ordered turns
+  transcripts ──exchange(conv_id) + sort(conv_id, turn_idx)──► ordered turns
       └► parse (Arrow-vectorized mapInPandas, narrow)
       └► STAGE: one columnar write of the parsed output (run_pipeline)
       └► enrich (broadcast dim join)
@@ -13,11 +13,13 @@ duckdb_impl.rs:796-936) restated Spark-first:
       └► aggregates (per-sink counts, conv × time-bucket rollups)
       └► manifest (per-stage fingerprint + per-partition lineage → resume)
 
-Shuffle budget: exactly ONE exchange of the full data (hash by conv_id for
-the ordering window); the parse/enrich/route stages are narrow on top of
-it, the degenerate-conv flags aggregation reads only (conv_id, has_ts)
-from the staged columnar output, and every join against driver-small
-sides is broadcast.
+Shuffle budget: the parse stage has ONE exchange of the full data (hash
+by conv_id, then a per-partition (conv_id, turn_idx) sort); enrich and
+route are narrow on top of the staged scan, the degenerate-conv flags
+aggregation reads only (conv_id, has_ts) from the staged columnar output,
+and every join against driver-small sides is broadcast.  The records sink
+adds one more, deliberate exchange: the salted (category, dt) repartition
+that bounds files per sink partition (sinks/writers.py).
 
 Scale design: the parse stage (the single most expensive stage) runs
 EXACTLY ONCE per run — its output is written to a staging parquet dir and
@@ -36,7 +38,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sqllog_analysis_spark.functions.parse import parse_transcripts
 from sqllog_analysis_spark.operators.aggregates import (
@@ -79,7 +81,6 @@ class PipelineConfig:
     input_format: str = "transcripts"
     slow_ms: int = 1000
     bucket: str = "hour"
-    stable_order: bool = True
     resume: bool = True
     # partition count for the conv_id exchange; None → 4 × defaultParallelism
     # (multiple task WAVES per core, so stragglers amortize — a single-wave
@@ -90,9 +91,6 @@ class PipelineConfig:
     # bound on sink files per (category, dt) directory — also the salt width
     # that spreads a hot sink partition over that many write tasks
     files_per_partition: int = 4
-    # inputs below this many turns skip the salted sink exchange; default 0
-    # = never skip (measured free even at 200k turns — see writers.py)
-    salt_min_rows: int = 0
     conf: dict = field(default_factory=dict)
 
 
@@ -103,17 +101,19 @@ def load_dim(spark: SparkSession) -> DataFrame:
 def parse_stage(
     spark: SparkSession,
     transcripts: DataFrame,
-    stable_order: bool = True,
     target_partitions: int | None = None,
 ) -> DataFrame:
-    """The parse stage: one conv_id exchange + ordering window + the
-    Arrow-vectorized parser.  Narrow on top of the single shuffle."""
+    """The parse stage: one conv_id exchange, a per-partition
+    (conv_id, turn_idx) sort, then the Arrow-vectorized parser — narrow on
+    top of the single shuffle.  The sort puts each conversation's turns in
+    order, as the reference reads a log file in byte order, so the parsed
+    output comes out sorted by (conv_id, turn_idx, rec_idx)."""
     n = target_partitions or 4 * spark.sparkContext.defaultParallelism
-    t = transcripts.repartition(n, "conv_id")
-    if stable_order:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        t = t.withColumn("turn_seq", F.row_number().over(w))
-    return parse_transcripts(t)
+    return parse_transcripts(
+        transcripts.repartition(n, "conv_id").sortWithinPartitions(
+            "conv_id", "turn_idx"
+        )
+    )
 
 
 def downstream(
@@ -126,7 +126,11 @@ def downstream(
     """Everything after the parse stage, as a pure transformation graph.
 
     ``parsed`` is ideally a staged (already materialized) source so the
-    branches below share its scan instead of re-running the parse."""
+    branches below share its scan instead of re-running the parse.
+
+    ``error_rows`` is NOT the full parsed width: it is the 5-column
+    projection (conv_id, error_line, error, raw, error_class) of the rows
+    with a parse error — exactly what ``route_errors`` consumes."""
     if dim is None:
         dim = load_dim(spark)
     degen = degenerate_convs(parsed)
@@ -159,7 +163,6 @@ def build(
     dim: DataFrame | None = None,
     slow_ms: int = 1000,
     bucket: str = "hour",
-    stable_order: bool = True,
     target_partitions: int | None = None,
 ) -> dict[str, DataFrame]:
     """Pure transformation graph — no writes, no actions, no caching.
@@ -167,7 +170,7 @@ def build(
     action); callers that materialize several outputs should either stage
     the parse via :func:`run_pipeline` / :func:`build_staged` or mark
     ``graph['parsed'].persist()`` themselves for small inputs."""
-    parsed = parse_stage(spark, transcripts, stable_order, target_partitions)
+    parsed = parse_stage(spark, transcripts, target_partitions)
     g = downstream(spark, parsed, dim, slow_ms=slow_ms, bucket=bucket)
     g["transcripts"] = transcripts
     return g
@@ -180,7 +183,6 @@ def build_staged(
     dim: DataFrame | None = None,
     slow_ms: int = 1000,
     bucket: str = "hour",
-    stable_order: bool = True,
     target_partitions: int | None = None,
     reuse_stage: bool = False,
 ) -> dict[str, DataFrame]:
@@ -188,7 +190,7 @@ def build_staged(
     downstream graph over the staged scan.  The one action here is the
     staging write; everything else stays lazy."""
     if not (reuse_stage and path_exists(os.path.join(stage_dir, "_SUCCESS"))):
-        parse_stage(spark, transcripts, stable_order, target_partitions).write.mode(
+        parse_stage(spark, transcripts, target_partitions).write.mode(
             "overwrite"
         ).parquet(stage_dir)
     parsed = spark.read.parquet(stage_dir)
@@ -220,7 +222,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         {
             "slow_ms": cfg.slow_ms,
             "bucket": cfg.bucket,
-            "stable_order": cfg.stable_order,
             "target_partitions": cfg.target_partitions,
             "input_format": cfg.input_format,
             **cfg.conf,
@@ -250,7 +251,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         stage_dir,
         slow_ms=cfg.slow_ms,
         bucket=cfg.bucket,
-        stable_order=cfg.stable_order,
         target_partitions=cfg.target_partitions,
         reuse_stage=parse_committed,
     )
@@ -310,14 +310,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             writable,
             cfg.output_dir,
             files_per_partition=cfg.files_per_partition,
-            # observed input size decides whether the bounded-files exchange
-            # pays for itself.  NOTE the hint counts input TURNS; routed
-            # rows can exceed it (a turn may hold several records), so a
-            # nonzero salt_min_rows is a coarse latency knob, not an exact
-            # row bound — the scale-safe default (0 = always exchange)
-            # never consults it
-            row_count_hint=n_turns,
-            salt_min_rows=cfg.salt_min_rows,
         )
         lineage = parquet_lineage(os.path.join(cfg.output_dir, "records"))
         commit("records", lineage, sum(p["row_count"] for p in lineage), t0)

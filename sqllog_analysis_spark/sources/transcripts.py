@@ -8,7 +8,7 @@ handles.  Fully seeded — same (n_turns, seed) ⇒ identical corpus.
 
 Conversation sizes are Zipf-skewed so a few mega-conversations exist
 (the skew-handling test), and rows are shuffled on disk so any ordering
-must come from the (conv_id, turn_idx) Window, not file order.
+must come from the parse stage's (conv_id, turn_idx) sort, not file order.
 """
 
 from __future__ import annotations

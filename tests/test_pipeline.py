@@ -531,7 +531,7 @@ def test_run_pipeline_poison_partition_commits_rest(spark, tmp_path, monkeypatch
 
 def test_fingerprint_covers_partitioning_config(spark, tmp_path):
     """Resume must NOT reuse a staged parse written under a different
-    stable_order/target_partitions (round-2 advice)."""
+    target_partitions (round-2 advice)."""
     inp = str(tmp_path / "transcripts.parquet")
     out = str(tmp_path / "out")
     write_transcripts(inp, 400, seed=8)

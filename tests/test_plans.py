@@ -81,6 +81,39 @@ def test_broadcast_enrich_uses_broadcast_hash_join(spark):
     assert "SortMergeJoin" not in txt
 
 
+def test_parse_stage_is_one_exchange_and_a_sort(spark):
+    """The parse stage orders each conversation's turns with ONE
+    hash(conv_id) exchange and a per-partition (conv_id, turn_idx) sort
+    feeding the Python parser — no Window operator."""
+    import datetime
+    import re
+
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
+    from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
+
+    t = spark.createDataFrame(
+        [("c1", 0, "user", "x", None, datetime.datetime(2025, 1, 1))],
+        schema=TRANSCRIPT_SCHEMA,
+    )
+    txt = plan_text(parse_stage(spark, t, target_partitions=4))
+    assert "Window" not in txt
+    assert n_exchanges(txt) == 1
+    assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, 4\)", txt)
+    assert re.search(
+        r"\(\d+\) Sort\n.*\nArguments: "
+        r"\[conv_id#\d+ ASC NULLS FIRST, turn_idx#\d+ ASC NULLS FIRST\]",
+        txt,
+    )
+    # tree lines read top-down: the parser sits above the sort, the sort
+    # above the exchange, with at most a projection in between
+    tree = [
+        line.strip(" +-:*").split(" (")[0]
+        for line in txt.split("\n\n")[0].splitlines()[1:]
+    ]
+    i = tree.index("MapInPandas")
+    assert [n for n in tree[i + 1:] if n != "Project"][:2] == ["Sort", "Exchange"]
+
+
 def test_filter_and_projection_reach_the_parquet_scan(spark):
     li = _t(spark, "lineitem").select(
         "l_orderkey", "l_partkey", "l_extendedprice"

@@ -11,7 +11,7 @@ from tests.conftest import norm_cell
 
 from sqllog_analysis_spark import oracle
 from sqllog_analysis_spark.functions.parse import parse_batch, parse_transcripts
-from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
+from sqllog_analysis_spark.schema import PARSED_SCHEMA, TRANSCRIPT_SCHEMA
 from sqllog_analysis_spark.sources.transcripts import generate_transcripts
 
 COMPARE_COLS = [
@@ -87,45 +87,50 @@ def test_spark_parse_matches_oracle(spark):
     assert_frames_equal(got[COMPARE_COLS], oracle_frame(df))
 
 
-def test_spark_parse_passthrough_turn_seq(spark):
-    from pyspark.sql import Window, functions as F
-
-    df = generate_transcripts(300, 3)
-    sdf = spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    sdf = sdf.withColumn("turn_seq", F.row_number().over(w))
-    out = parse_transcripts(sdf)
-    assert "turn_seq" in out.columns
-    pdf = out.filter(F.col("error").isNull()).select("turn_idx", "turn_seq").toPandas()
-    # dense turn_idx 0..n-1 per conv ⇒ row_number == turn_idx + 1
-    assert (pdf["turn_seq"] == pdf["turn_idx"] + 1).all()
-
-
 def test_empty_input(spark):
     sdf = spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA)
     assert parse_transcripts(sdf).count() == 0
 
 
-def test_parse_batch_strict_path_equals_general_path(monkeypatch):
-    """r6: a batch whose (conv_id, turn_idx) keys are strictly increasing
-    (the pipeline's ordering-window shape) skips the object-key sort and
-    the passthrough hash merge for integer positional ops.  Both paths
-    must produce IDENTICAL frames — values, dtypes AND row order — on the
-    same ordered input; forcing the general path via _strictly_increasing
-    pins that on a corpus with multi-record and slow-path turns."""
-    from sqllog_analysis_spark.functions import parse as P
-
+def test_parse_batch_keeps_sorted_input_order():
+    """The parse stage feeds each batch sorted by (conv_id, turn_idx);
+    parse_batch emits rows in (source row, rec_idx) order, so its output
+    is ALREADY sorted by (conv_id, turn_idx, rec_idx) — no sort needed —
+    with pinned dtypes and oracle values, on a corpus with multi-record
+    and slow-path turns interleaved with fast-path ones."""
     df = (
         generate_transcripts(2500, 42)
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
-    df["turn_seq"] = df.groupby("conv_id").cumcount() + 1
-    assert P._strictly_increasing(df)
-    got_strict = parse_batch(df, passthrough=["turn_seq"])
-    monkeypatch.setattr(P, "_strictly_increasing", lambda _: False)
-    got_general = parse_batch(df, passthrough=["turn_seq"])
-    pd.testing.assert_frame_equal(got_strict, got_general)
+    got = parse_batch(df)
+    keyed = got.sort_values(
+        ["conv_id", "turn_idx", "rec_idx"], kind="stable"
+    ).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, keyed)
+    assert list(got.columns) == [f.name for f in PARSED_SCHEMA.fields]
+    dtypes = got.dtypes.astype(str).to_dict()
+    assert {c: dtypes[c] for c in ("turn_idx", "rec_idx", "ep", "has_ts")} == {
+        "turn_idx": "int32", "rec_idx": "int32", "ep": "Int32", "has_ts": "bool",
+    }
+    for c in ("execute_time", "rowcount", "execute_id", "error_line"):
+        assert dtypes[c] == "Int64", c
+    assert_frames_equal(got[COMPARE_COLS], oracle_frame(df))
+
+
+def test_spark_parse_rejects_duplicate_turn_key_in_unsorted_input(spark):
+    """Follow mode parses micro-batches as they arrive — no exchange, no
+    sort.  A duplicated turn in SHUFFLED input must still fail loudly, not
+    emit the turn twice."""
+    df = generate_transcripts(200, 5)
+    dup = (
+        pd.concat([df, df.iloc[[17]]], ignore_index=True)
+        .sample(frac=1.0, random_state=3)
+        .reset_index(drop=True)
+    )
+    sdf = spark.createDataFrame(dup, schema=TRANSCRIPT_SCHEMA).coalesce(1)
+    with pytest.raises(Exception, match="duplicate turn key"):
+        parse_transcripts(sdf).collect()
 
 
 def test_pint_matches_oracle_parse_int_strict():

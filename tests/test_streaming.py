@@ -467,11 +467,7 @@ def test_stream_transcript_pipeline_degenerate_split_across_batches(spark, tmp_p
 
     # batch reference over the SAME union of A/B/D rows
     union = pd.concat([b1, b2], ignore_index=True)
-    g = build(
-        spark,
-        spark.createDataFrame(union, schema=TRANSCRIPT_SCHEMA),
-        stable_order=False,
-    )
+    g = build(spark, spark.createDataFrame(union, schema=TRANSCRIPT_SCHEMA))
     want_err = sorted(
         map(tuple, g["errors"].select("path", "line", "error", "raw").collect())
     )

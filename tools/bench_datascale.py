@@ -122,8 +122,8 @@ put ~{int(hot_frac * 100)}% of all rows in ONE task: ratio ≥ {int(hot_frac * 1
 at 128 partitions).
 
 The residual hot-leg penalty is structural, not a salting failure: turn
-ordering windows over conv_id, and a window needs the whole conversation
-in one task by semantics — a {int(n * hot_frac):,}-turn conversation IS
+ordering sorts each conversation's turns inside one conv_id partition, so
+the whole conversation lands in one task by design — a {int(n * hot_frac):,}-turn conversation IS
 one task's work on the ordering exchange, whatever the partition count.
 The SINK exchange (where naive partitioning collapses hardest, one
 (category, dt) directory = one reducer) is content-salted and stays
