@@ -89,15 +89,7 @@ def _pipeline_graph(spark: SparkSession, sf_dir: str) -> dict:
         path = os.path.join(_DATA_CACHE, f"transcripts_{_CONTRACT_N_TURNS}_s42.parquet")
         if not os.path.exists(path):
             write_transcripts(path, _CONTRACT_N_TURNS, seed=42)
-        # r6: the contract corpus is pinned at 20k turns — the pipeline's
-        # scale-sized default (4x parallelism waves) just multiplies
-        # per-task overhead here; results are partitioning-invariant
-        # (pinned by the repartition-invariance pytest)
-        g = build(
-            spark,
-            spark.read.parquet(path),
-            target_partitions=spark.sparkContext.defaultParallelism,
-        )
+        g = build(spark, spark.read.parquet(path))
         g["parsed"].persist()  # lazy: fills on first materialization
         _GRAPH_CACHE[key] = g
     return _GRAPH_CACHE[key]

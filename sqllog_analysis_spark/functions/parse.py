@@ -246,6 +246,14 @@ def _slow_parse(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_PARSED_COLS)
 
 
+def _duplicate_turn_key(conv_id, turn_idx) -> None:
+    raise ValueError(
+        "duplicate turn key in transcripts input: "
+        f"(conv_id={conv_id!r}, turn_idx={int(turn_idx)}) — "
+        "(conv_id, turn_idx) must be unique per conversation"
+    )
+
+
 def parse_batch(pdf: pd.DataFrame, passthrough: list[str] | None = None) -> pd.DataFrame:
     """Parse one Arrow batch of transcript turns → parsed/error rows.
 
@@ -270,11 +278,7 @@ def parse_batch(pdf: pd.DataFrame, passthrough: list[str] | None = None) -> pd.D
     dup = pdf.duplicated(["conv_id", "turn_idx"])
     if dup.any():
         k = pdf[dup].iloc[0]
-        raise ValueError(
-            "duplicate turn key in transcripts input: "
-            f"(conv_id={k['conv_id']!r}, turn_idx={int(k['turn_idx'])}) — "
-            "(conv_id, turn_idx) must be unique per conversation"
-        )
+        _duplicate_turn_key(k["conv_id"], k["turn_idx"])
     # One direct pass over the values (r6) replaces a chain of pandas
     # .str calls — identical semantics, pinned by the hypothesis parity
     # fuzz (tests/test_parser_fuzz.py) and the grammar-class tests:
@@ -364,11 +368,24 @@ def parse_transcripts(transcripts_df):
 
     Narrow map — preserves the input partitioning and row order; no
     shuffle.
+
+    ``parse_batch`` checks turn-key uniqueness within one Arrow batch; the
+    partition iterator also compares each batch's first key with the
+    previous batch's last, so the two adjacent copies of a duplicate in
+    ``parse_stage``'s sorted input are caught across a batch boundary too.
+    Two rows of unique-keyed input never share a key, so unsorted input
+    (follow mode) cannot trip the check falsely.
     """
     cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        last = None
         for pdf in batches:
+            if len(pdf):
+                first = (pdf["conv_id"].iat[0], pdf["turn_idx"].iat[0])
+                if first == last:
+                    _duplicate_turn_key(*first)
+                last = (pdf["conv_id"].iat[-1], pdf["turn_idx"].iat[-1])
             yield parse_batch(pdf)
 
     return transcripts_df.select(*cols).mapInPandas(run, schema=PARSED_SCHEMA)

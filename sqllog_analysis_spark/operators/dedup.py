@@ -33,17 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from sqllog_analysis_spark.functions.text import bind_once, fingerprint
-
-
-def _parse_byte_conf(s: str) -> int:
-    """Spark byte-string conf value ('8m', '128mb', '134217728') → bytes."""
-    s = str(s).strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)
+from sqllog_analysis_spark.session import scan_partitions
 
 
 def _spread_compact_input(df: DataFrame) -> DataFrame:
@@ -54,37 +44,14 @@ def _spread_compact_input(df: DataFrame) -> DataFrame:
     shuffle that unlocks full parallelism; at real scale the file splits
     already provide partitions and this is a no-op.
 
-    Compactness is judged from file metadata (``inputFiles()`` + stat), a
-    pure metadata path — ``df.rdd.getNumPartitions()`` would force a
-    plan→RDD conversion on every signature call.  The scan-partition count
-    is estimated the way Spark's FilePartition packing actually works:
-    files are split at maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, padded_total / parallelism)) and the chunks are
-    bin-packed (each file padded by openCostInBytes) into partitions of
-    that size.  MANY SMALL FILES therefore still land in FEW scan
-    partitions — ``len(files)`` is NOT a lower bound on parallelism, so
-    there is no file-count early-out.  Non-file inputs (createDataFrame
-    fixtures) report zero files and get spread — right for them; a big
-    multi-file input estimates ≥ n packed partitions and passes through
-    untouched."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files:
-        return df.repartition(n)
-    from sqllog_analysis_spark.sinks.lineage import _resolve
-
-    mpb = _parse_byte_conf(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    open_cost = _parse_byte_conf(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
-    fs, _ = _resolve(files[0])
-    roots = [_resolve(f)[1] for f in files]
-    padded = sum(
-        max(i.size or 0, 1) + open_cost for i in fs.get_file_info(roots)
-    )
-    max_split = min(mpb, max(open_cost, padded // n or 1))
-    est = -(-padded // max_split)  # ceil — underestimates fragmentation,
-    # which errs toward spreading (the safe direction for a CPU-bound stage)
-    return df.repartition(n) if est < n else df
+    Compactness is judged from file metadata by
+    ``session.scan_partitions`` (no job, no plan→RDD conversion on every
+    signature call).  Non-file inputs (createDataFrame fixtures) report no
+    scan and get spread — right for them; a big multi-file input splits
+    into ≥ n partitions and passes through untouched."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    n_scan = scan_partitions(df)
+    return df.repartition(n) if n_scan is None or n_scan < n else df
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

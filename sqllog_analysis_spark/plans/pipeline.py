@@ -38,6 +38,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sqllog_analysis_spark.functions.parse import parse_transcripts
@@ -62,6 +63,7 @@ from sqllog_analysis_spark.operators.routing import (
     split_sink_contract,
 )
 from sqllog_analysis_spark.schema import DIM_SCHEMA
+from sqllog_analysis_spark.session import scan_partitions
 from sqllog_analysis_spark.sinks.manifest import Manifest, fingerprint_input
 from sqllog_analysis_spark.sinks.writers import (
     write_aggregates,
@@ -69,6 +71,10 @@ from sqllog_analysis_spark.sinks.writers import (
     write_error_sink,
 )
 from sqllog_analysis_spark.sources.transcripts import role_tool_dim_rows
+
+
+# run_pipeline's stages, in the order its summary reports them
+STAGES = ("parsed", "records", "parse_errors", "aggregates")
 
 
 @dataclass
@@ -82,10 +88,9 @@ class PipelineConfig:
     slow_ms: int = 1000
     bucket: str = "hour"
     resume: bool = True
-    # partition count for the conv_id exchange; None → 4 × defaultParallelism
-    # (multiple task WAVES per core, so stragglers amortize — a single-wave
-    # layout makes the slowest partition the wall clock).  Pin it explicitly
-    # when comparing the SAME job across cluster sizes (the scaling bench):
+    # partition count for the conv_id exchange; None → parse_stage's
+    # default, sized from the input scan.  Pin it explicitly when
+    # comparing the SAME job across cluster sizes (the scaling bench):
     # partitioning belongs to the data, not the executor count.
     target_partitions: int | None = None
     # bound on sink files per (category, dt) directory — also the salt width
@@ -95,7 +100,12 @@ class PipelineConfig:
 
 
 def load_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(role_tool_dim_rows(), schema=DIM_SCHEMA)
+    """The (role, tool) lookup dim as a JVM-local table.  Built from a
+    pandas frame it plans as a ``LocalTableScan``; built from a list of
+    rows it would be a ``Scan ExistingRDD`` that every broadcast of the dim
+    re-reads through Python workers."""
+    rows = pd.DataFrame(role_tool_dim_rows(), columns=DIM_SCHEMA.fieldNames())
+    return spark.createDataFrame(rows, schema=DIM_SCHEMA)
 
 
 def parse_stage(
@@ -107,8 +117,21 @@ def parse_stage(
     (conv_id, turn_idx) sort, then the Arrow-vectorized parser — narrow on
     top of the single shuffle.  The sort puts each conversation's turns in
     order, as the reference reads a log file in byte order, so the parsed
-    output comes out sorted by (conv_id, turn_idx, rec_idx)."""
-    n = target_partitions or 4 * spark.sparkContext.defaultParallelism
+    output comes out sorted by (conv_id, turn_idx, rec_idx).
+
+    Width: ``target_partitions`` when given; else, for a file scan,
+    ``max(defaultParallelism, session.scan_partitions(transcripts))`` — one
+    task per core at least, and as many as Spark's bytes-based input split,
+    so it grows with the data but no further: each parse task is a Python
+    task with a fixed ~0.25 CPU-s cost (README "Scale design").  An input
+    that reads no files (the raw log reader, an in-memory frame) keeps
+    ``4 × defaultParallelism``."""
+    if target_partitions:
+        n = target_partitions
+    else:
+        dp = spark.sparkContext.defaultParallelism
+        n_scan = scan_partitions(transcripts)
+        n = 4 * dp if n_scan is None else max(dp, n_scan)
     return parse_transcripts(
         transcripts.repartition(n, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
@@ -408,5 +431,12 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     counts = {r["category"]: r["n"] for r in counts_tbl}
     n_errors = (manifest.read("parse_errors") or {}).get("row_count", 0)
     s = make_summary(n_turns, counts, n_errors)
-    s.update({"stages_ran": ran, "stages_skipped": skipped, "fingerprint": fp})
+    # the two chains append concurrently: report in stage order instead
+    s.update(
+        {
+            "stages_ran": sorted(ran, key=STAGES.index),
+            "stages_skipped": sorted(skipped, key=STAGES.index),
+            "fingerprint": fp,
+        }
+    )
     return s

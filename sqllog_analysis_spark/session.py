@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -82,3 +82,56 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parse_byte_conf(s: str) -> int:
+    """Spark byte-string conf value ('8m', '128mb', '134217728') → bytes."""
+    s = str(s).strip().lower()
+    if s.endswith("b"):
+        s = s[:-1]
+    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if s and s[-1] in mult:
+        return int(float(s[:-1]) * mult[s[-1]])
+    return int(s)
+
+
+def scan_partitions(df: DataFrame) -> int | None:
+    """How many partitions Spark's file scan splits ``df``'s input into,
+    from file metadata alone (``inputFiles()`` + stat): no job and no
+    plan→RDD conversion.  None when ``df`` reads no files (an in-memory
+    frame, the raw log reader's chunk table).
+
+    Mirrors Spark's FilePartition packing for one scan of splittable files
+    (parquet): each file is cut into chunks of maxSplitBytes =
+    min(maxPartitionBytes, max(openCostInBytes, padded_total /
+    minPartitionNum)), every file padded by openCostInBytes, and the
+    chunks, largest first, fill partitions of that size next-fit.  Many
+    small files therefore still land in few partitions."""
+    files = df.inputFiles()
+    if not files:
+        return None
+    from sqllog_analysis_spark.sinks.lineage import _resolve
+
+    spark = df.sparkSession
+    conf = spark.conf
+    max_bytes = parse_byte_conf(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = parse_byte_conf(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    fs, _ = _resolve(files[0])
+    sizes = [i.size or 0 for i in fs.get_file_info([_resolve(f)[1] for f in files])]
+    padded = sum(sizes) + open_cost * len(sizes)
+    split = max(1, min(max_bytes, max(open_cost, padded // min_parts)))
+    chunks = sorted(
+        (min(split, n - off) for n in sizes for off in range(0, n, split)),
+        reverse=True,
+    )
+    parts, filled = 0, 0
+    for c in chunks:
+        if filled and filled + c > split:
+            parts, filled = parts + 1, 0
+        filled += c + open_cost
+    return parts + (filled > 0)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +38,12 @@ def n_nodes(txt: str, name: str) -> int:
 
 def n_exchanges(txt: str) -> int:
     return n_nodes(txt, "Exchange")
+
+
+def exchange_width(df) -> int:
+    """Partition count of the plan's hashpartitioning(conv_id) exchange."""
+    m = re.search(r"hashpartitioning\(conv_id#\d+, (\d+)\)", plan_text(df))
+    return int(m[1])
 
 
 def _t(spark, name):
@@ -112,6 +119,102 @@ def test_parse_stage_is_one_exchange_and_a_sort(spark):
     ]
     i = tree.index("MapInPandas")
     assert [n for n in tree[i + 1:] if n != "Project"][:2] == ["Sort", "Exchange"]
+
+
+def test_lookup_dim_is_a_jvm_local_table(spark, tmp_path):
+    """The enrich dim is a LocalTableScan, so no broadcast of it starts a
+    Python worker; a dim built from a list of rows would be a Scan
+    ExistingRDD, read through Python workers on every broadcast."""
+    from sqllog_analysis_spark.operators.enrich import enrich_with_dim
+    from sqllog_analysis_spark.plans.pipeline import load_dim
+    from sqllog_analysis_spark.sources.transcripts import write_transcripts
+
+    dim = load_dim(spark)
+    txt = plan_text(dim)
+    assert n_nodes(txt, "LocalTableScan") == 1
+    assert "ExistingRDD" not in txt
+
+    inp = str(tmp_path / "t.parquet")
+    write_transcripts(inp, 200, seed=3)
+    txt = plan_text(enrich_with_dim(spark.read.parquet(inp), dim))
+    assert "Scan parquet" in txt
+    for node in ("ExistingRDD", "EvalPython", "InPandas"):
+        assert node not in txt, node
+
+
+def test_parse_stage_width_follows_the_input_split(spark, tmp_path):
+    """With no target_partitions the conv_id exchange gets
+    max(defaultParallelism, partitions of the input scan); an explicit
+    value still wins, and computing the default runs no Spark job."""
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
+    from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
+    from sqllog_analysis_spark.session import scan_partitions
+    from sqllog_analysis_spark.sources.transcripts import generate_transcripts
+
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    pdf = generate_transcripts(400, 7)
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    src = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
+    one, many = str(tmp_path / "one.parquet"), str(tmp_path / "many.parquet")
+    src.coalesce(1).write.parquet(one)
+    src.repartition(3 * dp).write.parquet(many)
+
+    # reading a parquet schema runs a job, so read before counting; each
+    # frame's scan is split (planned) later, under the conf of the moment
+    whole, cut, small = (spark.read.parquet(p) for p in (one, one, many))
+    group = "parse_stage_width"
+    sc.setJobGroup(group, "count jobs")
+    split_conf = {
+        "spark.sql.files.maxPartitionBytes": "4096",
+        "spark.sql.files.openCostInBytes": "1024",
+    }
+    try:
+        # one small file: a single split, so one task per core
+        assert scan_partitions(whole) == whole.rdd.getNumPartitions() == 1
+        assert exchange_width(parse_stage(spark, whole)) == dp
+        assert exchange_width(parse_stage(spark, whole, target_partitions=3)) == 3
+        # many small files pack into few splits
+        n_small = scan_partitions(small)
+        assert n_small == small.rdd.getNumPartitions() < len(small.inputFiles())
+        assert exchange_width(parse_stage(spark, small)) == max(dp, n_small)
+        # the same file cut into 4 KB splits: the width follows the split
+        for k, v in split_conf.items():
+            spark.conf.set(k, v)
+        n_scan = scan_partitions(cut)
+        assert n_scan == cut.rdd.getNumPartitions() > dp
+        assert exchange_width(parse_stage(spark, cut)) == n_scan
+        assert exchange_width(parse_stage(spark, cut, target_partitions=3)) == 3
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        cut.count()  # the counter sees a job when one runs
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    finally:
+        for k in split_conf:
+            spark.conf.unset(k)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_parse_stage_width_of_raw_log_input(spark, tmp_path):
+    """The raw dmsql reader reads no files through a Spark scan (its chunk
+    table is in memory), so its parse keeps 4 × defaultParallelism
+    whatever the number of log files."""
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
+    from sqllog_analysis_spark.session import scan_partitions
+    from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
+
+    dp = spark.sparkContext.defaultParallelism
+    line = (
+        "2025-09-21 12:00:00.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 "
+        "stmt:NULL) [SEL]: select 1\n"
+    )
+    d = tmp_path / "rawlogs"
+    d.mkdir()
+    for i in range(8 * dp):
+        (d / f"dmsql_{i}.log").write_text(line, encoding="utf-8")
+    raw = read_sqllog_dir(spark, str(d))
+    assert scan_partitions(raw) is None
+    assert exchange_width(parse_stage(spark, raw)) == 4 * dp
+    assert exchange_width(parse_stage(spark, raw, target_partitions=3)) == 3
 
 
 def test_filter_and_projection_reach_the_parquet_scan(spark):

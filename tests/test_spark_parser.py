@@ -133,6 +133,32 @@ def test_spark_parse_rejects_duplicate_turn_key_in_unsorted_input(spark):
         parse_transcripts(sdf).collect()
 
 
+def test_spark_parse_rejects_duplicate_turn_key_across_arrow_batches(spark):
+    """The parse stage's sort puts the two copies of a duplicated turn key
+    next to each other; when they straddle an Arrow batch boundary, each
+    batch alone is unique, so the partition iterator must carry the last
+    key of one batch into the next."""
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
+
+    df = generate_transcripts(40, 5).sort_values(["conv_id", "turn_idx"])
+    df = df[df["conv_id"] == df["conv_id"].iloc[0]].head(4)
+    # sorted: turn 0, 1, 2, 2', 3 → batches [0, 1, 2] | [2', 3]
+    dup = pd.concat([df, df.iloc[[2]]], ignore_index=True)
+    assert len(dup) == 5 and dup["turn_idx"].nunique() == 4
+    sdf = spark.createDataFrame(dup, schema=TRANSCRIPT_SCHEMA)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        # the same boundary without the duplicate parses cleanly
+        clean = spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA)
+        assert parse_stage(spark, clean, target_partitions=1).count() >= 4
+        with pytest.raises(Exception, match="duplicate turn key"):
+            parse_stage(spark, sdf, target_partitions=1).collect()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_pint_matches_oracle_parse_int_strict():
     """The fused fast path's scalar int coercion must agree with the
     oracle's Rust-parse mirror on every tier: plain, zero-padded,
