@@ -68,8 +68,9 @@ _GRAPH_CACHE: dict[str, dict] = {}
 # turns, seed 42) regardless of sf_dir: they check pipeline SEMANTICS
 # against constant hard-oracle values computed by the pure-Python oracle
 # (contract_expected.py), which must not drift with the driver's sf choice.
-# Scale behavior is bench.py / tools/bench_scaling.py's job, which use the
-# sf-scaled corpus via _transcripts_path.
+# Scale behavior is measured by perfbench/ (seeded corpora, per-layer and
+# 1→4-core scaling metrics) and bench.py (the sf-scaled corpus via
+# _transcripts_path).
 _CONTRACT_N_TURNS = 20000
 
 

@@ -79,7 +79,3 @@ def init_logging(
     logger.propagate = False
     logger.info("日志功能已启用（%s），等级: %s", "stdout + file" if enable_stdout else "仅文件", level)
     return path
-
-
-def get_logger() -> logging.Logger:
-    return logging.getLogger(LOGGER_NAME)

@@ -9,12 +9,8 @@ partitions by key, and a running ``last(ignorenulls)`` window over
 ``(ts, tag)`` carries the latest right payload forward onto each left
 row.  Cost is a single exchange + per-key sort-merge — the same profile
 as a groupBy — versus the O(|L|·|R|) per-key blowup of the naive
-``l.ts >= r.ts`` theta-join.  At 100 TB: keys hash-partition uniformly;
-a mega-key (one user with 10^9 events) serializes its window sort —
-:func:`asof_join_bucketed` removes that straggler by partitioning on
-(key, time-bucket) with carry-in boundary replication, at the cost of
-one extra bucket-rollup pass (pytest pins its exact equality to this
-function).
+``l.ts >= r.ts`` theta-join.  Keys hash-partition uniformly; a mega-key
+(one user with 10^9 events) still serializes its own window sort.
 
 Ties: a right row at exactly the left timestamp IS visible (tag orders
 right-before-left within equal ts), matching DuckDB's ``ASOF JOIN ...
@@ -31,13 +27,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 _TAG = "_asof_tag"
 _TS = "_asof_ts"
 
-_RESERVED = (_TAG, _TS, "_m", "_bucket")
+_RESERVED = (_TAG, _TS, "_m")
 
 
 def _checked_rcols(left, right, key, right_ts) -> list:
-    """Shared validation: right payload columns, name-clash and
-    reserved-scratch-name checks (both as-of variants use identical
-    rules, so they can never drift)."""
+    """Right payload columns, after the name-clash and
+    reserved-scratch-name checks."""
     rcols = [c for c in right.columns if c not in (*key, right_ts)]
     clash = set(rcols) & set(left.columns)
     if clash:
@@ -61,7 +56,6 @@ def _carried_struct(w, rcols):
         F.when(F.col(_TAG) == 0, F.struct(F.col(_TS).alias("_mts"), *rcols)),
         ignorenulls=True,
     ).over(w)
-
 
 
 def asof_join(
@@ -122,94 +116,3 @@ def asof_join(
         ok = ok & (dist <= tolerance_seconds)
     payload = [F.when(ok, F.col(f"_m.{c}")).alias(c) for c in rcols]
     return filled.select(*lcols, *payload)
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    bucket_seconds: int = 3600,
-) -> DataFrame:
-    """Backward as-of join partitioned by ``(key, time-bucket)`` — the
-    mega-key scale path.
-
-    :func:`asof_join` sorts each key's FULL history in one window
-    partition; a hot key (one user with 10^9 events at 100 TB) becomes a
-    single straggler task.  Here every (key, bucket) sorts independently:
-
-    1. bucket-level "carry-in": per (key, bucket) take the latest right
-       row with ``ts < bucket start``.  Computed on ROLLED-UP bucket rows
-       (one per (key, bucket) the right side touches — |buckets| rows per
-       key, not |rows|) with a tiny running-max window, then re-joined to
-       at most one full right row per bucket.
-    2. union: left rows + in-bucket right rows + the carry-in row, window
-       per (key, bucket) — partitions are time-bounded, so the sort cost
-       per task is O(rows in one bucket), regardless of key heat.
-
-    Exactly equal to ``asof_join(left, right)`` for the backward
-    direction (pinned by pytest on random corpora); right rows must be
-    unique per (key, ts) as in the unbucketed form.
-    """
-    key = [on] if isinstance(on, str) else list(on)
-    rcols = _checked_rcols(left, right, key, right_ts)
-    b = F.lit(int(bucket_seconds))
-    bucket_of = lambda c: F.floor(c.cast("timestamp").cast("long") / b)  # noqa: E731
-
-    r = right.select(*key, F.col(right_ts).alias(_TS), *rcols).withColumn(
-        "_bucket", bucket_of(F.col(_TS))
-    )
-    l_ = (
-        left.withColumn(_TS, F.col(left_ts))
-        .withColumn(_TAG, F.lit(1))
-        .withColumn("_bucket", bucket_of(F.col(_TS)))
-    )
-
-    # -- 1. carry-in: the latest right row strictly before each bucket's
-    # start.  Any right row in an EARLIER bucket is strictly before this
-    # bucket starts, and in-bucket right rows already sit in the step-2
-    # partition — so the carry-in is simply the max right ts over
-    # preceding buckets.  Computed on ROLLED-UP rows (one per (key,
-    # bucket) either side touches — |buckets| rows per key, not |rows|).
-    per_bucket = r.groupBy(*key, "_bucket").agg(F.max(_TS).alias("_last_ts"))
-    left_buckets = l_.select(*key, "_bucket").distinct()
-    all_buckets = left_buckets.join(
-        per_bucket, [*key, "_bucket"], "outer"
-    )
-    wb = (
-        Window.partitionBy(*key)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        all_buckets.withColumn("_carry_ts", F.max("_last_ts").over(wb))
-        .select(*key, "_bucket", "_carry_ts")
-        .filter(F.col("_carry_ts").isNotNull())
-    )
-    # materialize the carry-in right ROW for each bucket (join on the
-    # unique (key, ts) of the carried row), replicated into that bucket.
-    carry_rows = (
-        carry.join(
-            r.select(*key, F.col(_TS).alias("_carry_ts"), *rcols),
-            [*key, "_carry_ts"],
-        )
-        .select(*key, F.col("_carry_ts").alias(_TS), *rcols, "_bucket")
-    )
-
-    # -- 2. per-(key, bucket) union-tag window, same as the plain asof.
-    r_in = r.withColumn(_TAG, F.lit(0))
-    c_in = carry_rows.withColumn(_TAG, F.lit(0))
-    u = l_.unionByName(r_in, allowMissingColumns=True).unionByName(
-        c_in, allowMissingColumns=True
-    )
-    w = (
-        Window.partitionBy(*key, "_bucket")
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select("*", _carried_struct(w, rcols).alias("_m")).filter(
-        F.col(_TAG) == 1
-    )
-    payload = [F.when(F.col("_m").isNotNull(), F.col(f"_m.{c}")).alias(c) for c in rcols]
-    return filled.select(*left.columns, *payload)

@@ -156,58 +156,6 @@ def funnel_counts(
     )
 
 
-def funnel_counts_iterative(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Skew-immune exact funnel — same semantics as :func:`funnel_counts`
-    (pinned equal by pytest), different physical shape for corpora where
-    ONE user owns a significant fraction of all events:
-
-    the window variant sorts each user's rows inside one task, so a
-    mega-user is a straggler; this variant computes each step as a
-    conditional MIN *aggregate* (map-side combine collapses the mega-user
-    inside every task) joined back per user.  k steps cost k agg+join
-    rounds over an ever-smaller user frame — no per-user sort anywhere.
-
-    Prefer :func:`funnel_counts` when keys are well distributed (one
-    exchange beats k); prefer this when a key can be huge.
-    """
-    ev = events.select(user_col, type_col, ts_col)
-    # step 0: plain conditional min — no join needed.  Each frontier is
-    # persisted (and the previous one released) so the per-step count()
-    # actions don't rebuild the whole chain from raw events — without
-    # the persist, k steps would scan events O(k²/2) times.
-    frontier = (
-        ev.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_s0"))
-        .persist()
-    )
-    counts = [frontier.count()]
-    for i, s in enumerate(steps[1:], start=1):
-        prev_f, prev = frontier, f"_s{i - 1}"
-        frontier = (
-            ev.filter(F.col(type_col) == s)
-            .join(frontier, user_col)
-            .filter(F.col(ts_col) > F.col(prev))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias(f"_s{i}"))
-            .persist()
-        )
-        counts.append(frontier.count())
-        prev_f.unpersist()
-    frontier.unpersist()
-    spark = events.sparkSession
-    return spark.createDataFrame(
-        [tuple(counts)],
-        ", ".join(f"step{i + 1}_users long" for i in range(len(steps))),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Cohort retention
 # ---------------------------------------------------------------------------

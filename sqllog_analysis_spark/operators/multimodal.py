@@ -10,19 +10,14 @@ metadata.  The split of work is the one that survives 100 TB:
   Arrow-batched ``mapInPandas`` stage that passes the JVM-computed columns
   through untouched (narrow, no join-back shuffle).
 
-Decoders: ``decoder=None`` uses a deterministic fake (normalized byte
-histogram) that is oracle-checked end-to-end (the driver contract's
-``media_features`` query reproduces it in pure SQL); :func:`real_decode`
-natively decodes dependency-free binary formats (P6 PPM images, RIFF
-16-bit-PCM WAV audio) in pure numpy; richer codecs (PNG/JPEG/MP3/MP4)
-inject via ``extract_features(decoder=...)`` without touching the Spark
-plumbing — schema, partitioning, UDF signature, and batch shapes are
-identical for every decoder.
+The decoder is a deterministic stand-in (normalized byte histogram) that
+is oracle-checked end-to-end: the driver contract's ``media_features``
+query reproduces it in pure SQL.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -83,8 +78,7 @@ def media_from_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str 
 
 def _fake_decode_features(payload: bytes, dim: int = 16) -> np.ndarray:
     """Deterministic stand-in for a real decoder: normalized byte histogram
-    folded to ``dim`` buckets.  Replace with a real decode when media
-    libraries are available."""
+    folded to ``dim`` buckets."""
     if not payload:
         return np.zeros(dim, dtype=np.float32)
     arr = np.frombuffer(payload, dtype=np.uint8)
@@ -93,15 +87,9 @@ def _fake_decode_features(payload: bytes, dim: int = 16) -> np.ndarray:
     return hist / s if s else hist
 
 
-def extract_features(
-    media: DataFrame,
-    decoder: Callable[[bytes], np.ndarray] | None = None,
-    dim: int = 16,
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """binary payload → (n_bytes, sha256 — JVM-side) + fixed-dim feature
     vector (decode — Arrow-batched Python).  Narrow end to end."""
-    decode = decoder or (lambda b: _fake_decode_features(b, dim))
-
     pre = media.select(
         "media_id",
         "kind",
@@ -120,108 +108,11 @@ def extract_features(
                     "n_bytes": pdf["n_bytes"],
                     "sha256": pdf["sha256"],
                     "feature": pdf["payload"].map(
-                        lambda b: decode(bytes(b)).tolist() if b is not None else None
+                        lambda b: _fake_decode_features(bytes(b), dim).tolist()
+                        if b is not None
+                        else None
                     ),
                 }
             )
 
     return pre.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Real decoders — dependency-free binary formats (pure numpy, deterministic).
-# PPM (P6) covers the image path and WAV (RIFF PCM) the audio path without
-# any media library; richer codecs (PNG/JPEG/MP3/MP4) plug into the same
-# ``extract_features(decoder=...)`` injection point when their libraries
-# are available.
-# ---------------------------------------------------------------------------
-
-
-def _ppm_header(payload: bytes) -> tuple[int, int, int, int]:
-    """Parse a binary-PPM (P6) header → (width, height, maxval, data_offset).
-    Handles the format's whitespace/comment grammar (tokens separated by
-    arbitrary whitespace; ``#`` starts a comment to end-of-line)."""
-    if not payload.startswith(b"P6"):
-        raise ValueError("not a P6 PPM payload")
-    tokens: list[int] = []
-    i = 2
-    while len(tokens) < 3:
-        if i >= len(payload):
-            raise ValueError("truncated PPM header")
-        c = payload[i : i + 1]
-        if c == b"#":
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        else:
-            j = i
-            while j < len(payload) and not payload[j : j + 1].isspace():
-                j += 1
-            tokens.append(int(payload[i:j]))
-            i = j
-    return tokens[0], tokens[1], tokens[2], i + 1  # single whitespace after maxval
-
-
-def decode_ppm(payload: bytes) -> np.ndarray:
-    """P6 PPM → feature vector [width, height, mean_r, mean_g, mean_b,
-    std_gray] (pixel stats normalized to [0, 1])."""
-    w, h, maxval, off = _ppm_header(payload)
-    if not 0 < maxval < 256:
-        # maxval >= 256 means 2-byte samples (legal PPM, unsupported
-        # here); 0 would divide to inf — both must raise, not mis-decode
-        raise ValueError(f"unsupported PPM maxval {maxval} (need 1-byte samples)")
-    n = w * h * 3
-    px = np.frombuffer(payload, dtype=np.uint8, count=n, offset=off)
-    if px.size != n:
-        raise ValueError(f"PPM pixel data truncated: want {n} bytes")
-    img = px.reshape(h, w, 3).astype(np.float64) / maxval
-    gray = img.mean(axis=2)
-    return np.array(
-        [w, h, img[..., 0].mean(), img[..., 1].mean(), img[..., 2].mean(), gray.std()],
-        dtype=np.float32,
-    )
-
-
-def decode_wav_pcm(payload: bytes) -> np.ndarray:
-    """RIFF/WAVE 16-bit PCM → feature vector [n_channels, sample_rate,
-    n_samples, rms, zero_crossing_rate] (samples normalized to [-1, 1])."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    i, fmt, data = 12, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        size = int.from_bytes(payload[i + 4 : i + 8], "little")
-        body = payload[i + 8 : i + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_fmt = int.from_bytes(fmt[0:2], "little")
-    n_channels = int.from_bytes(fmt[2:4], "little")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_fmt != 1 or bits != 16:
-        raise ValueError(f"only 16-bit PCM supported (fmt={audio_fmt}, bits={bits})")
-    x = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-    n_samples = x.size // max(n_channels, 1)
-    rms = float(np.sqrt((x**2).mean())) if x.size else 0.0
-    zcr = float((np.diff(np.signbit(x)) != 0).mean()) if x.size > 1 else 0.0
-    return np.array([n_channels, sample_rate, n_samples, rms, zcr], dtype=np.float32)
-
-
-def real_decode(payload: bytes) -> np.ndarray:
-    """Magic-byte-dispatched real decoder (the non-fake default): P6 PPM
-    images and RIFF 16-bit-PCM WAV audio decode natively; other containers
-    raise with a pointer to the injection point."""
-    if payload.startswith(b"P6"):
-        return decode_ppm(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav_pcm(payload)
-    raise ValueError(
-        "unsupported media container (native decoders: P6 PPM, PCM WAV); "
-        "inject a library-backed decoder via extract_features(decoder=...)"
-    )

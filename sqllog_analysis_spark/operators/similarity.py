@@ -346,142 +346,6 @@ def lsh_near_dup_pairs(
     )
 
 
-def write_embedding_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    bits: int = 8,
-    seed: int = 42,
-    seeds: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Persist the hyperplane-LSH bucket index (vec_id, ls, bucket,
-    embedding) for INCREMENTAL embedding dedup — the companion of
-    :func:`sqllog_analysis_spark.operators.dedup.write_minhash_index` for
-    the embedding modality.  The embedding rides along (one copy per
-    plane set) because the pair stage must confirm cosine ≥ threshold
-    against history vectors; bucket assignment itself stays narrow.
-
-    A ``_params.json`` sidecar pins (dim, bits, seed, seeds); the
-    incremental reader hashes the increment with exactly these planes —
-    buckets from different plane sets are incomparable.
-    """
-    import json
-    import os
-
-    params = {"dim": dim, "bits": bits, "seed": seed, "seeds": seeds}
-    sidecar = os.path.join(path, "_params.json")
-    if mode == "append" and os.path.exists(sidecar):
-        with open(sidecar) as f:
-            existing = json.load(f)
-        if existing != params:
-            raise ValueError(
-                f"embedding index at {path} was built with {existing}, "
-                f"append requested with {params}"
-            )
-    variants = []
-    for s in range(seeds):
-        planes = hyperplanes(dim, bits, seed + s)
-        variants.append(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.lit(s).alias("ls"),
-                bucket_ids(vec_col, planes).alias("bucket"),
-                F.col(vec_col).alias("embedding"),
-            )
-        )
-    v = variants[0]
-    for extra in variants[1:]:
-        v = v.unionByName(extra)
-    v.write.mode(mode).parquet(path)
-    with open(sidecar, "w") as f:
-        json.dump(params, f)
-
-
-def lsh_near_dup_pairs_incremental(
-    new_corpus: DataFrame,
-    index_path: str,
-    threshold: float = 0.9,
-    max_bucket: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-dup pairs TOUCHING the new batch (new↔old and
-    new↔new, cosine ≥ threshold), never old↔old — the incremental-ingest
-    shape, exact vs a full :func:`lsh_near_dup_pairs` run over (old ∪
-    new) restricted to new-touching pairs (cap computed on the union;
-    pinned by test_embedding_incremental_matches_full).
-
-    Plane parameters come from the index's ``_params.json`` sidecar.
-    Scale shape: ONE shuffle on (plane-set, bucket); history arrives
-    pre-bucketed from the index, only the increment pays plane
-    projection.  Emits (a, b, cosine, a_is_new, b_is_new) with a < b.
-    """
-    import json
-    import os
-
-    spark = new_corpus.sparkSession
-    with open(os.path.join(index_path, "_params.json")) as f:
-        p = json.load(f)
-
-    variants = []
-    for s in range(p["seeds"]):
-        planes = hyperplanes(p["dim"], p["bits"], p["seed"] + s)
-        variants.append(
-            new_corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.lit(s).alias("ls"),
-                bucket_ids(vec_col, planes).alias("bucket"),
-                F.col(vec_col).alias("embedding"),
-            )
-        )
-    new_b = variants[0]
-    for extra in variants[1:]:
-        new_b = new_b.unionByName(extra)
-    new_b = new_b.withColumn("_new", F.lit(True))
-    old_b = spark.read.parquet(index_path).select(
-        "vec_id", "ls", "bucket", "embedding", F.lit(False).alias("_new")
-    )
-    union = new_b.unionByName(old_b)
-
-    w = Window.partitionBy("ls", "bucket")
-    capped = (
-        union.withColumn("_c", F.count("*").over(w))
-        .filter(F.col("_c") <= max_bucket)
-        .drop("_c")
-    )
-    lhs = capped.filter(F.col("_new")).select(
-        "ls", "bucket", F.col("vec_id").alias("x"), F.col("embedding").alias("vx"),
-        _norm(F.col("embedding")).alias("_nx"))
-    rhs = capped.select(
-        "ls", "bucket", F.col("vec_id").alias("y"), F.col("embedding").alias("vy"),
-        F.col("_new").alias("y_new"),
-        _norm(F.col("embedding")).alias("_ny"))
-    return (
-        lhs.join(rhs, ["ls", "bucket"])
-        .filter(F.col("x") != F.col("y"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("vx"), F.col("vy"))
-                / (F.col("_nx") * F.col("_ny")),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            "cosine",
-            F.when(F.col("x") < F.col("y"), F.lit(True)).otherwise(F.col("y_new")).alias("a_is_new"),
-            F.when(F.col("x") < F.col("y"), F.col("y_new")).otherwise(F.lit(True)).alias("b_is_new"),
-        )
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the other standard scale path next to
 # hyperplane LSH: partition the corpus into Voronoi cells around learned

@@ -90,8 +90,9 @@ class PipelineConfig:
     resume: bool = True
     # partition count for the conv_id exchange; None → parse_stage's
     # default, sized from the input scan.  Pin it explicitly when
-    # comparing the SAME job across cluster sizes (the scaling bench):
-    # partitioning belongs to the data, not the executor count.
+    # comparing the SAME job across cluster sizes (perfbench's 1→4-core
+    # scaling probe): partitioning belongs to the data, not the executor
+    # count.
     target_partitions: int | None = None
     # bound on sink files per (category, dt) directory — also the salt width
     # that spreads a hot sink partition over that many write tasks

@@ -55,11 +55,8 @@ def get_spark(
         # broadcast than to shuffle the fact side.  Estimate-driven, so it
         # stays scale-adaptive: at 100 TB the big tables' size estimates
         # blow past any threshold and the planner falls back to shuffle
-        # joins.  Parameterised for clusters with smaller executors.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"),
-        )
+        # joins.  ``extra_conf`` overrides it for smaller executors.
+        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # prefer shuffled-hash over sort-merge when the per-partition build
         # side fits (guide §9) — skips both sort passes
         .config("spark.sql.join.preferSortMergeJoin", "false")

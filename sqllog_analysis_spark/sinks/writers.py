@@ -181,35 +181,6 @@ def export_table(
         w.json(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str | list[str],
-    buckets: int = 64,
-) -> None:
-    """Write ``df`` as a BUCKETED external table: rows hash-partitioned
-    into ``buckets`` files by ``key`` and sorted within each bucket.
-
-    Bucketing is the pre-shuffle data layout for repeated big-big joins:
-    two tables bucketed on the same key with the same bucket count join
-    with ZERO exchanges — the scan's output partitioning already
-    satisfies the join's distribution (pinned by
-    test_plans.py::test_bucketed_join_avoids_shuffle).  At 10^12 turns,
-    paying the layout once at write time beats re-shuffling both sides
-    on every join; the Iceberg analog is a bucket partition transform.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    (
-        df.write.bucketBy(buckets, *keys)
-        .sortBy(*keys)
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def read_sink(spark: SparkSession, out_dir: str, category: str | None = None) -> DataFrame:
     df = spark.read.parquet(os.path.join(out_dir, "records"))
     return df.filter(F.col("category") == category) if category else df

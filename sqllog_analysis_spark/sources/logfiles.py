@@ -159,8 +159,12 @@ def read_sqllog_dir(
     if not chunks:
         return spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA)
 
+    # from a pandas frame the chunk table plans as a LocalTableScan; from a
+    # list of tuples it would be a Scan ExistingRDD, read through Python
+    # workers before the chunk exchange
     cdf = spark.createDataFrame(
-        chunks, schema="conv_id string, path string, start long, end long, mtime double"
+        pd.DataFrame(chunks, columns=["conv_id", "path", "start", "end", "mtime"]),
+        schema="conv_id string, path string, start long, end long, mtime double",
     ).repartition(len(chunks))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,19 +1,20 @@
-"""Structured Streaming variant of the parse → route pipeline.
+"""Follow mode: the batch parse → route → sinks graph under ``readStream``.
 
 The reference is batch-only (SURVEY.md §2.10); its `stream_parse`
-(io.rs:82) is streaming only in the bounded-memory sense.  This module
-shows the same operator graph under ``readStream`` so the engine extends
-to continuous ingestion: the vectorized parse (mapInPandas) and the
-routing when-chain are streaming-safe as-is; aggregates become
-watermarked event-time windows.
+(io.rs:82) is streaming only in the bounded-memory sense.  Follow mode
+(``python -m sqllog_analysis_spark --follow``) runs the COMPLETE batch
+routing graph inside ``foreachBatch`` on micro-batches that hold only
+complete conversations: raw-log mode gets that per file
+(:func:`stream_sqllog_pipeline`), transcripts mode from the
+:func:`closed_conversations` buffer (:func:`stream_transcript_pipeline`).
+Each micro-batch lands in exactly-once ``ingest_batch=<id>`` sinks, and
+the digest and latency partials fold at read time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from sqllog_analysis_spark.functions.parse import parse_transcripts
-from sqllog_analysis_spark.operators.routing import route_records
 from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
 
 
@@ -94,178 +95,6 @@ def read_sqllog_stream(spark: SparkSession, directory: str) -> DataFrame:
     return raw.mapInPandas(run, schema=TRANSCRIPT_SCHEMA)
 
 
-def streaming_routed(stream: DataFrame, slow_ms: int = 1000) -> DataFrame:
-    """Parse + route a transcript stream (append-mode safe) — the
-    LOW-LATENCY variant: rows route as they arrive, so the
-    conversation-level degenerate rule and error sink (which need the
-    whole conversation) are not applied.  For exact batch parity use
-    :func:`stream_transcript_pipeline`, which buffers conversations to
-    completion first."""
-    return route_records(parse_transcripts(stream), slow_ms=slow_ms)
-
-
-def streaming_sink_counts(
-    routed: DataFrame, watermark: str = "1 hour", window: str = "10 minutes"
-) -> DataFrame:
-    """Event-time windowed per-category counts with late-data handling."""
-    return (
-        routed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "category")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def streaming_conv_sessions(
-    parsed_stream: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Custom stateful operator: per-conversation session summaries via
-    ``applyInPandasWithState`` (SURVEY §2.10 extension — the reference has
-    no streaming at all; Spark's own built-ins have no conversation-close
-    semantics either, so this is the applyInPandasWithState tier of the
-    custom-operator ladder).
-
-    State per conv_id accumulates (turns, records, errors, first/last
-    event time) across micro-batches; when a conversation goes quiet for
-    ``gap`` of EVENT time (enforced against the watermark, so late data
-    within the watermark still lands in its session), the operator emits
-    exactly one summary row and drops the state — bounded memory at any
-    conversation cardinality.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    gap_ms = int(pd.Timedelta(gap).total_seconds() * 1000)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("n_turns", T.LongType()),
-            T.StructField("n_records", T.LongType()),
-            T.StructField("n_errors", T.LongType()),
-            T.StructField("first_ts", T.TimestampType()),
-            T.StructField("last_ts", T.TimestampType()),
-            T.StructField("duration_sec", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n_turns", T.LongType()),
-            T.StructField("n_records", T.LongType()),
-            T.StructField("n_errors", T.LongType()),
-            T.StructField("first_ms", T.LongType()),
-            T.StructField("last_ms", T.LongType()),
-        ]
-    )
-
-    def close_sessions(key, pdfs, state: GroupState):
-        (conv_id,) = key
-        if state.hasTimedOut:
-            n_turns, n_rec, n_err, first_ms, last_ms = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    # n_turns = sum of per-micro-batch distinct turn ids.
-                    # EXACT for both stream shapes this engine produces: a
-                    # turn's parsed rows always share the micro-batch,
-                    # because file-source batches are whole files and a
-                    # turn is one input row (transcripts) or one segment of
-                    # one file (raw logs).  A custom source that splits one
-                    # turn's rows across batches would double-count it —
-                    # an id-RANGE formula is no fix (raw-log turn ids are
-                    # byte offsets, not contiguous).
-                    "n_turns": [n_turns],
-                    "n_records": [n_rec],
-                    "n_errors": [n_err],
-                    "first_ts": [pd.Timestamp(first_ms, unit="ms")],
-                    "last_ts": [pd.Timestamp(last_ms, unit="ms")],
-                    "duration_sec": [(last_ms - first_ms) / 1000.0],
-                }
-            )
-            return
-        n_rec = n_err = 0
-        first_ms = last_ms = None
-        turn_ids: set = set()
-        for pdf in pdfs:  # vectorized per Arrow batch, no per-row python
-            # distinct across this micro-batch's Arrow chunks (one group's
-            # batch may arrive as several pdfs; dedup within the batch)
-            turn_ids.update(pdf["turn_idx"].unique().tolist())
-            n_rec += int(pdf["occurrence_time"].notna().sum())
-            n_err += int(pdf["error"].notna().sum())
-            # unit-robust: datetime64[ns] or [us] → epoch ms
-            ts_ms = pd.Series(
-                pd.to_datetime(pdf["ts"]).values.astype("datetime64[ms]").astype("int64")
-            )
-            first_ms = min(first_ms, int(ts_ms.min())) if first_ms is not None else int(ts_ms.min())
-            last_ms = max(last_ms, int(ts_ms.max())) if last_ms is not None else int(ts_ms.max())
-        prev = state.get if state.exists else (0, 0, 0, first_ms, last_ms)
-        merged = (
-            prev[0] + len(turn_ids),
-            prev[1] + n_rec,
-            prev[2] + n_err,
-            min(prev[3], first_ms),
-            max(prev[4], last_ms),
-        )
-        state.update(merged)
-        # close when event time passes last activity + gap; the timeout must
-        # sit beyond the current watermark or Spark rejects it
-        state.setTimeoutTimestamp(
-            max(merged[4] + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        return
-        yield  # pragma: no cover — makes this a generator on the update path
-
-    return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            close_sessions,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_to_category_sinks(
-    routed_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Continuous ingestion into a partitioned records sink via
-    ``foreachBatch`` (X1 batch-consumer hook), with EXACTLY-ONCE delivery:
-
-    each micro-batch lands in its own ``ingest_batch=<id>`` partition
-    directory written with mode=overwrite — a retried/reprocessed batch id
-    REPLACES its own output instead of appending duplicates, and the
-    streaming checkpoint guarantees batch ids are assigned once.  Readers
-    scan the root (ingest_batch / category / dt are all partition
-    columns, so pruning works on any of them).  This is the plain-parquet
-    analog of an Iceberg snapshot-per-batch commit.
-    """
-    import os
-
-    rec_root = os.path.join(out_dir, "records_stream")
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("dt", F.to_date("ts"))
-            .sortWithinPartitions("category", "dt", "session")
-            .write.mode("overwrite")
-            .partitionBy("category", "dt")
-            .parquet(os.path.join(rec_root, f"ingest_batch={batch_id}"))
-        )
-
-    return (
-        routed_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def stream_sqllog_pipeline(
     spark: SparkSession,
     directory: str,
@@ -276,19 +105,21 @@ def stream_sqllog_pipeline(
     """FULL-fidelity continuous ingestion of raw dmsql logs: parse →
     degenerate-conversation rule → route → records/errors sinks, streaming.
 
-    The transcript-parquet stream (:func:`streaming_routed`) cannot apply
-    the conversation-level degenerate rule — a conversation may span
-    files, so no micro-batch ever knows it has seen all of it.  Raw-log
-    mode has no such problem: conv_id IS the file, and the binaryFile
+    A transcript-parquet stream cannot apply the conversation-level
+    degenerate rule per file — a conversation may span files, so no
+    micro-batch knows it has seen all of it until
+    :func:`closed_conversations` says so.  Raw-log mode has no such
+    problem: conv_id IS the file, and the binaryFile
     source delivers each file whole, exactly once.  Every micro-batch
     therefore contains only complete conversations, and running the
     COMPLETE batch routing graph (degenerate rule, error routing,
     sink-contract isolation) inside ``foreachBatch`` yields results
     identical to the batch pipeline over the same files.
 
-    Sinks follow the exactly-once ``ingest_batch=<id>`` overwrite pattern
-    of :func:`stream_to_category_sinks`: a reprocessed batch id replaces
-    its own output, never duplicates it.
+    Each micro-batch lands in its own ``ingest_batch=<id>`` directory
+    written with mode=overwrite, and the checkpoint assigns batch ids
+    once: a reprocessed batch id replaces its own output, never
+    duplicates it (exactly-once).
     """
     segments = read_sqllog_stream(spark, directory)
     return (
@@ -492,11 +323,18 @@ def closed_conversations(
     raw-log mode pays per in-flight file.  Late data within the watermark
     still joins its conversation; a turn later than (close + watermark) is
     a new conversation instance, the standard watermark trade-off.
+
+    The state holds a conversation's whole turn list, so a turn key that
+    arrives twice (in two files or micro-batches) raises here: the
+    parse's per-batch check only sees the copies when one Arrow batch, or
+    two adjacent sorted batches, holds both.
     """
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
+
+    from sqllog_analysis_spark.functions.parse import _duplicate_turn_key
 
     gap_ms = int(pd.Timedelta(gap).total_seconds() * 1000)
 
@@ -550,6 +388,11 @@ def closed_conversations(
                 list(p[3]) + tl,
                 list(p[4]) + tm,
             )
+        seen: set = set()
+        for t in ti:
+            if t in seen:
+                _duplicate_turn_key(conv_id, t)
+            seen.add(t)
         last = max(tm)
         state.update((ti, ro, tx, tl, tm, last))
         # release when event time passes last activity + gap; the timeout
@@ -588,9 +431,7 @@ def stream_transcript_pipeline(
     batch-parity counterpart of :func:`stream_sqllog_pipeline` for the
     transcripts table input.
 
-    :func:`streaming_routed` stays the low-latency variant (per-turn
-    routing, no conversation-close semantics); this pipeline trades
-    latency (a conversation's rows land only after it has been quiet for
+    This pipeline trades latency (a conversation's rows land only after it has been quiet for
     ``gap``) for EXACT batch parity: :func:`closed_conversations` buffers
     turns per conversation in state, and each released micro-batch —
     complete conversations only — runs the identical batch routing graph
@@ -637,23 +478,3 @@ def read_batch_metrics(out_dir: str) -> list[dict]:
         with open(f, encoding="utf-8") as fh:
             out.append(json.load(fh))
     return out
-
-
-def run_stream_to_memory(
-    spark: SparkSession, path: str, query_name: str = "routed_counts"
-):
-    """Drive the stream synchronously to completion against a static
-    directory (test/demo harness): memory sink + processAllAvailable."""
-    routed = streaming_routed(read_transcript_stream(spark, path))
-    counts = streaming_sink_counts(routed)
-    # complete mode so windows are visible without advancing the watermark
-    # past end-of-data (static-directory test harness)
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -6,11 +6,12 @@ src/analysis_log.rs:81-202 semantics.
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 
 import pytest
 
-from sqllog_analysis_spark.logging_setup import get_logger, init_logging, resolve_log_file
+from sqllog_analysis_spark.logging_setup import LOGGER_NAME, init_logging, resolve_log_file
 
 
 def test_disabled_is_noop():
@@ -36,7 +37,7 @@ def test_init_with_dir_creates_it_and_writes(tmp_path):
     d = tmp_path / "logs_here"
     path = init_logging(log_file=str(d), enable_stdout=False)
     assert os.path.isdir(d) and os.path.isfile(path)
-    get_logger().info("hello from test")
+    logging.getLogger(LOGGER_NAME).info("hello from test")
     with open(path, encoding="utf-8") as f:
         content = f.read()
     assert "hello from test" in content and "日志功能已启用" in content

@@ -142,6 +142,24 @@ def test_lookup_dim_is_a_jvm_local_table(spark, tmp_path):
         assert node not in txt, node
 
 
+def test_raw_log_chunk_table_is_a_jvm_local_table(spark, tmp_path):
+    """The raw log reader's byte-range chunk table is a LocalTableScan;
+    built from a list of tuples it would be a Scan ExistingRDD, read
+    through Python workers before the chunk exchange."""
+    from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
+
+    d = tmp_path / "rawlogs"
+    d.mkdir()
+    (d / "dmsql_a.log").write_text(
+        "2025-09-21 12:00:00.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 "
+        "stmt:NULL) [SEL]: select 1\n",
+        encoding="utf-8",
+    )
+    txt = plan_text(read_sqllog_dir(spark, str(d)))
+    assert n_nodes(txt, "LocalTableScan") == 1
+    assert "ExistingRDD" not in txt
+
+
 def test_parse_stage_width_follows_the_input_split(spark, tmp_path):
     """With no target_partitions the conv_id exchange gets
     max(defaultParallelism, partitions of the input scan); an explicit
@@ -282,74 +300,6 @@ def test_temporal_joins_never_nested_loop(spark, which):
     txt = plan_text(out)
     assert "CartesianProduct" not in txt
     assert "BroadcastNestedLoopJoin" not in txt
-
-
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts join
-    with ZERO exchanges — the write-time layout (sinks/writers.py::
-    write_bucketed) replaces the per-join shuffle, the property that
-    makes repeated big-big joins affordable at 10^12 rows."""
-    from sqllog_analysis_spark.sinks.writers import write_bucketed
-
-    a = spark.range(0, 5000).select(
-        (F.col("id") % 400).alias("k"), F.col("id").alias("va")
-    )
-    b = spark.range(0, 3000).select(
-        (F.col("id") % 400).alias("k"), (F.col("id") * 2).alias("vb")
-    )
-    write_bucketed(a, "bt_a", str(tmp_path / "bt_a"), "k", buckets=8)
-    write_bucketed(b, "bt_b", str(tmp_path / "bt_b"), "k", buckets=8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bt_a").join(spark.table("bt_b"), "k")
-        txt = plan_text(joined)
-        assert "SortMergeJoin" in txt
-        assert n_exchanges(txt) == 0  # bucket layout satisfies the join
-        # and the result is right (not just the plan shape)
-        assert joined.count() == a.join(b, "k").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
-
-
-def test_zorder_layout_bounds_both_columns(spark, tmp_path):
-    """Z-order clustering (sinks/layout.py::write_zordered) makes file
-    min/max stats selective on BOTH key columns at once: per-file span
-    on each dimension is a small fraction of the full range, while a
-    single-column sort leaves the second column's spans at ~full range
-    (no pruning possible)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from sqllog_analysis_spark.sinks.layout import write_zordered
-
-    n = 40_000
-    df = spark.range(n).select(
-        (F.hash(F.col("id")) % 10_000).alias("x"),
-        (F.hash(F.col("id") + 7) % 10_000).alias("y"),
-    ).filter((F.col("x") >= 0) & (F.col("y") >= 0))
-
-    def spans(path, col):
-        out = []
-        for f in glob.glob(path + "/*.parquet"):
-            pdf = pq.read_table(f, columns=[col]).to_pandas()[col]
-            out.append(int(pdf.max()) - int(pdf.min()))
-        return sum(out) / len(out) / 10_000  # avg span as range fraction
-
-    zdir = str(tmp_path / "z")
-    ldir = str(tmp_path / "linear")
-    write_zordered(df, zdir, ["x", "y"], n_files=16)
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(ldir)
-
-    # linear layout: perfect on x, useless on y
-    assert spans(ldir, "x") < 0.15
-    assert spans(ldir, "y") > 0.8
-    # z-order: BOTH dimensions bounded well below the full range
-    assert spans(zdir, "x") < 0.5
-    assert spans(zdir, "y") < 0.5
 
 
 def test_chunking_is_a_pure_projection(spark):

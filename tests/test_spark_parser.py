@@ -180,12 +180,11 @@ def test_pint_matches_oracle_parse_int_strict():
 
 
 def test_duplicate_turn_key_fails_loudly():
-    """The passthrough re-attach merges on (conv_id, turn_idx); a dirty
-    upstream with duplicate turn keys must raise, not silently fan out
-    every parsed row per duplicate (the input contract guarantees
+    """parse_batch's per-batch check: one Arrow batch that holds a
+    (conv_id, turn_idx) twice, wherever the copies sit, raises instead of
+    emitting the turn's rows twice (the input contract guarantees
     uniqueness — this pins the failure mode when it's violated)."""
     df = generate_transcripts(20, 5)
     dup = pd.concat([df, df.iloc[[0]]], ignore_index=True)
-    dup["turn_seq"] = range(len(dup))  # any passthrough column arms the merge
     with pytest.raises(ValueError, match="duplicate turn key"):
-        parse_batch(dup, passthrough=["turn_seq"])
+        parse_batch(dup)

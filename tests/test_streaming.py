@@ -1,239 +1,9 @@
-"""Structured Streaming variant: same parse + route semantics under
-readStream (batch parity checked against the batch pipeline)."""
+"""Follow mode: the batch parse + route graph under readStream (batch
+parity checked against the batch pipeline)."""
 
 from __future__ import annotations
 
 import pytest
-
-from sqllog_analysis_spark.sources.transcripts import write_transcripts
-from sqllog_analysis_spark.streaming.stream_pipeline import run_stream_to_memory
-
-
-@pytest.mark.slow
-def test_stream_counts_match_batch(spark, tmp_path):
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
-    from sqllog_analysis_spark.operators.routing import route_records
-    from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
-
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    write_transcripts(str(d / "part0.parquet"), 600, seed=9)
-
-    out = run_stream_to_memory(spark, str(d), query_name="t_stream")
-    got = {
-        r["category"]: r["n"]
-        for r in out.groupBy("category").agg(F.sum("n").alias("n")).collect()
-    }
-
-    # streaming variant has no conversation-level degenerate pass (needs
-    # global state); compare against the pre-degenerate batch routed set
-    pdf = pq.read_table(str(d / "part0.parquet")).to_pandas()
-    sdf = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
-    routed = route_records(parse_transcripts(sdf))
-    want = {
-        r["category"]: r["n"]
-        for r in routed.groupBy("category").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == want
-
-
-@pytest.mark.slow
-def test_stateful_conv_sessions_close_on_event_time_gap(spark, tmp_path):
-    """applyInPandasWithState sessionizer: a conversation emits exactly one
-    summary row once event time moves past its last activity + gap, with
-    counts matching a batch aggregation of the same data."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
-    from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
-    from sqllog_analysis_spark.streaming.stream_pipeline import (
-        streaming_conv_sessions,
-    )
-
-    d = tmp_path / "sess_in"
-    d.mkdir()
-    t0 = dt.datetime(2025, 9, 16, 0, 0, 0)
-    hdr = "2025-09-16 00:00:00.000 (EP[1] sess:NULL thrd:1 user:u trxid:1 stmt:NULL) [SEL]: q"
-
-    def rows(conv, ts_list, texts):
-        return pd.DataFrame(
-            {
-                "conv_id": conv,
-                "turn_idx": pd.Series(range(len(ts_list)), dtype="int32"),
-                "role": "user",
-                "text": texts,
-                "tool": pd.Series([None] * len(ts_list), dtype="string"),
-                "ts": pd.Series(ts_list).astype("datetime64[us]"),
-            }
-        )
-
-    # batch 1: convs A (2 turns: 1 record + 1 parse error) and B (1 record)
-    b1 = pd.concat(
-        [
-            rows("A", [t0, t0 + dt.timedelta(seconds=30)], [hdr, "not a log line"]),
-            rows("B", [t0 + dt.timedelta(seconds=60)], [hdr]),
-        ]
-    )
-    b1.to_parquet(d / "b1.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    sessions = streaming_conv_sessions(
-        parse_transcripts(stream), gap="5 minutes", watermark="10 seconds"
-    )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sessions")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM t_sessions").count() == 0  # nothing closed
-
-        # batch 2: conv C one hour later → watermark passes A/B's gap
-        rows("C", [t0 + dt.timedelta(hours=1)], [hdr]).to_parquet(
-            d / "b2.parquet", index=False
-        )
-        q.processAllAvailable()
-        # one more batch so the timeout fires against the advanced watermark
-        rows("C2", [t0 + dt.timedelta(hours=1, seconds=1)], [hdr]).to_parquet(
-            d / "b3.parquet", index=False
-        )
-        q.processAllAvailable()
-
-        out = {r["conv_id"]: r for r in spark.sql("SELECT * FROM t_sessions").collect()}
-        assert set(out) >= {"A", "B"}, out.keys()
-        a = out["A"]
-        assert a["n_turns"] == 2 and a["n_records"] == 1 and a["n_errors"] == 1
-        assert a["duration_sec"] == 30.0
-        b = out["B"]
-        assert b["n_turns"] == 1 and b["n_records"] == 1 and b["n_errors"] == 0
-    finally:
-        q.stop()
-
-
-@pytest.mark.slow
-def test_stream_to_category_sinks_exactly_once(spark, tmp_path):
-    """foreachBatch sink: per-batch overwrite directories give exactly-once
-    delivery — row set equals the batch pipeline's routed set, and a
-    restart from the same checkpoint with no new data adds nothing."""
-    from pyspark.sql import functions as F
-
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
-    from sqllog_analysis_spark.operators.routing import route_records
-    from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
-    from sqllog_analysis_spark.streaming.stream_pipeline import (
-        stream_to_category_sinks,
-        streaming_routed,
-    )
-
-    d = tmp_path / "sink_in"
-    d.mkdir()
-    write_transcripts(str(d / "p0.parquet"), 300, seed=17)
-    write_transcripts(str(d / "p1.parquet"), 300, seed=18)
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)  # force one micro-batch per file
-            .parquet(str(d))
-        )
-        q = stream_to_category_sinks(
-            streaming_routed(stream.repartition(4)), out, ckpt
-        ).start()
-        q.processAllAvailable()
-        q.stop()
-
-    run_once()
-    got = spark.read.parquet(out + "/records_stream")
-    key = ["conv_id", "turn_idx", "rec_idx"]
-    got_keys = sorted(map(tuple, got.select(*key).collect()))
-
-    # batch reference: same parse+route over the same files
-    batch = route_records(
-        parse_transcripts(spark.read.schema(TRANSCRIPT_SCHEMA).parquet(str(d)))
-    )
-    want_keys = sorted(map(tuple, batch.select(*key).collect()))
-    assert got_keys == want_keys
-    assert got.select("ingest_batch").distinct().count() >= 2  # multi-batch
-
-    # restart from the same checkpoint: nothing new → no duplicates
-    run_once()
-    assert (
-        sorted(map(tuple, spark.read.parquet(out + "/records_stream").select(*key).collect()))
-        == want_keys
-    )
-
-
-@pytest.mark.slow
-def test_streaming_raw_log_ingestion_matches_batch(spark, tmp_path):
-    """Streaming dmsql_*.log mode (readStream binaryFile → segment_bytes →
-    parse → route): a second .log file appended MID-STREAM is picked up,
-    and the routed rows over both files equal the batch pipeline's on the
-    union directory."""
-    from pyspark.sql import functions as F
-
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
-    from sqllog_analysis_spark.operators.routing import route_records
-    from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
-    from sqllog_analysis_spark.streaming.stream_pipeline import (
-        read_sqllog_stream,
-        streaming_routed,
-    )
-
-    good = (
-        "2025-09-21 12:00:00.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 stmt:NULL) [SEL]: select *\n"
-        "from users\n"
-        "EXECTIME: 1500(ms) ROWCOUNT: 1 EXEC_ID: 123.\n"
-        "2025-09-21 12:00:01.000 (EP[2] sess:0xabc thrd:2 user:usr trxid:2 stmt:NULL) [UPD]: update t\n"
-    )
-    second = (
-        "2025-09-21 12:00:02.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 stmt:NULL) [SEL]: ok\n"
-        "TOOL_CALL: lookup(x)\n"
-    )
-    d = tmp_path / "rawlogs"
-    d.mkdir()
-    (d / "dmsql_a.log").write_text(good, encoding="utf-8")
-    (d / "ignored.txt").write_text(good, encoding="utf-8")  # wrong prefix/ext
-
-    q = (
-        streaming_routed(read_sqllog_stream(spark, str(d)))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("raw_stream")
-        .start()
-    )
-    q.processAllAvailable()
-    mid = spark.sql("SELECT COUNT(*) AS n FROM raw_stream").collect()[0]["n"]
-    assert mid > 0  # first file already routed
-
-    # second file lands while the stream is running
-    (d / "dmsql_b.LOG").write_text(second, encoding="utf-8")
-    q.processAllAvailable()
-    q.stop()
-
-    # ts in the key pins the mtime-derived timestamp parity (binaryFile's
-    # modificationTime vs the batch reader's os.stat, both ms-truncated)
-    # and hence dt= sink-partition parity, not just row-set parity
-    key = ["conv_id", "turn_idx", "rec_idx", "category", "ts"]
-    got = sorted(map(tuple, spark.table("raw_stream").select(*key).collect()))
-    batch = route_records(parse_transcripts(read_sqllog_dir(spark, str(d))))
-    want = sorted(map(tuple, batch.select(*key).collect()))
-    assert got == want and len(got) > len(
-        sorted(map(tuple, spark.table("raw_stream").limit(mid).collect()))
-    ) - 1
 
 
 @pytest.mark.slow
@@ -242,7 +12,10 @@ def test_stream_sqllog_pipeline_full_batch_parity(spark, tmp_path):
     error sink + contract split) per micro-batch: conv_id = file and files
     arrive whole, so the streamed records AND errors must equal the batch
     pipeline's over the same directory — including a degenerate file that
-    yields only the synthetic 无有效日志行 error row."""
+    yields only the synthetic 无有效日志行 error row.  A file that fails
+    the dmsql_*.log discovery filter is not ingested, and a restart from
+    the same checkpoint with no new files adds no rows (exactly-once
+    ``ingest_batch=`` sinks)."""
     from sqllog_analysis_spark.oracle import NO_VALID_LINE
     from sqllog_analysis_spark.plans.pipeline import build
     from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
@@ -260,6 +33,7 @@ def test_stream_sqllog_pipeline_full_batch_parity(spark, tmp_path):
     d.mkdir()
     (d / "dmsql_a.log").write_text(good, encoding="utf-8")
     (d / "dmsql_junk.log").write_text("no timestamps at all\n", encoding="utf-8")
+    (d / "ignored.txt").write_text(good, encoding="utf-8")  # wrong prefix/ext
     out = str(tmp_path / "spout")
     ckpt = str(tmp_path / "spckpt")
 
@@ -269,14 +43,15 @@ def test_stream_sqllog_pipeline_full_batch_parity(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    got_rec = sorted(
-        map(tuple, spark.read.parquet(out + "/records_stream")
-            .select("conv_id", "turn_idx", "rec_idx", "category", "ts").collect())
-    )
-    got_err = sorted(
-        map(tuple, spark.read.json(out + "/errors_stream")
-            .select("path", "line", "error", "raw").collect())
-    )
+    def sinks():
+        rec = spark.read.parquet(out + "/records_stream")
+        err = spark.read.json(out + "/errors_stream")
+        return (
+            sorted(map(tuple, rec.select("conv_id", "turn_idx", "rec_idx", "category", "ts").collect())),
+            sorted(map(tuple, err.select("path", "line", "error", "raw").collect())),
+        )
+
+    got_rec, got_err = sinks()
 
     g = build(spark, read_sqllog_dir(spark, str(d)))
     # ts included: mtime-derived timestamp (and so dt= partition) parity
@@ -289,6 +64,13 @@ def test_stream_sqllog_pipeline_full_batch_parity(spark, tmp_path):
     assert got_rec == want_rec and len(got_rec) > 0
     assert got_err == want_err
     assert any(r[3] == NO_VALID_LINE for r in got_err)  # degenerate file routed
+    assert "ignored.txt" not in {r[0] for r in got_rec} | {r[0] for r in got_err}
+
+    # restart from the same checkpoint with no new files: nothing is added
+    q = stream_sqllog_pipeline(spark, str(d), out, ckpt).start()
+    q.processAllAvailable()
+    q.stop()
+    assert sinks() == (got_rec, got_err)
 
 
 @pytest.mark.slow
@@ -481,3 +263,62 @@ def test_stream_transcript_pipeline_degenerate_split_across_batches(spark, tmp_p
     assert [e for e in got_err if e[3] == NO_VALID_LINE] == [
         ("D", 0, f"未知错误: {NO_VALID_LINE}", NO_VALID_LINE)
     ]
+
+
+@pytest.mark.slow
+def test_stream_transcript_pipeline_rejects_duplicate_turn_across_files(spark, tmp_path):
+    """A conversation's turn key that arrives twice, in two files, must
+    fail loudly.  With 2-row Arrow batches the released turns [0, 1, 2, 0]
+    parse as [0, 1] | [2, 0]: no batch holds both copies and no batch
+    boundary puts them next to each other, so only the conversation
+    buffer, which holds the whole turn list, can see the duplicate."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from sqllog_analysis_spark.streaming.stream_pipeline import (
+        stream_transcript_pipeline,
+    )
+
+    t0 = dt.datetime(2025, 9, 16, 0, 0, 0)
+    hdr = "2025-09-16 00:00:00.000 (EP[1] sess:NULL thrd:1 user:u trxid:1 stmt:NULL) [SEL]: q"
+
+    def rows(conv, turns, ts_list):
+        return pd.DataFrame(
+            {
+                "conv_id": conv,
+                "turn_idx": pd.Series(turns, dtype="int32"),
+                "role": "user",
+                "text": hdr,
+                "tool": pd.Series([None] * len(turns), dtype="string"),
+                "ts": pd.Series(ts_list).astype("datetime64[us]"),
+            }
+        )
+
+    sec = dt.timedelta(seconds=1)
+    d = tmp_path / "dup_in"
+    d.mkdir()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    q = stream_transcript_pipeline(
+        spark, str(d), str(tmp_path / "dup_out"), str(tmp_path / "dup_ckpt"),
+        gap="5 minutes", watermark="10 seconds",
+    ).start()
+    try:
+        rows("D", [0, 1, 2], [t0, t0 + sec, t0 + 2 * sec]).to_parquet(
+            d / "b1.parquet", index=False
+        )
+        q.processAllAvailable()
+        with pytest.raises(Exception, match="duplicate turn key"):
+            rows("D", [0], [t0]).to_parquet(d / "b2.parquet", index=False)
+            q.processAllAvailable()
+            # watermark pushers: release D if the copy was not caught yet
+            for i, name in enumerate(("P1", "P2")):
+                rows(name, [0], [t0 + dt.timedelta(hours=1) + i * sec]).to_parquet(
+                    d / f"b{3 + i}.parquet", index=False
+                )
+                q.processAllAvailable()
+    finally:
+        q.stop()
+        spark.conf.set(key, old)

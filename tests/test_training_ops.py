@@ -159,76 +159,6 @@ def test_multimodal_feature_plumbing(spark):
     assert out2[1]["sha256"] == out[1]["sha256"]
 
 
-def _make_ppm(w: int = 64, h: int = 48) -> bytes:
-    """Deterministic 64x48 P6 fixture: R ramps with x, G ramps with y, B
-    constant 128 — mean R = mean(0..w-1 scaled), analytic expectations."""
-    x = np.arange(w, dtype=np.float64) * 255 / (w - 1)
-    y = np.arange(h, dtype=np.float64) * 255 / (h - 1)
-    img = np.zeros((h, w, 3), dtype=np.uint8)
-    img[..., 0] = np.round(x)[None, :]
-    img[..., 1] = np.round(y)[:, None]
-    img[..., 2] = 128
-    return b"P6\n# fixture\n64 48\n255\n" + img.tobytes()
-
-
-def _make_wav(n: int = 800, rate: int = 8000) -> bytes:
-    """Mono 16-bit PCM sine fixture with an exact RIFF container."""
-    t = np.arange(n, dtype=np.float64)
-    samples = (0.5 * np.sin(2 * np.pi * 440 * t / rate) * 32767).astype("<i2")
-    data = samples.tobytes()
-    fmt = (
-        (1).to_bytes(2, "little")          # PCM
-        + (1).to_bytes(2, "little")        # mono
-        + rate.to_bytes(4, "little")
-        + (rate * 2).to_bytes(4, "little") # byte rate
-        + (2).to_bytes(2, "little")        # block align
-        + (16).to_bytes(2, "little")       # bits
-    )
-    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    body += b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-
-def test_real_decode_ppm_and_wav():
-    """The dependency-free real decoders: P6 PPM pixel stats and WAV PCM
-    audio stats match analytic expectations; unknown containers raise."""
-    from sqllog_analysis_spark.operators.multimodal import real_decode
-
-    f = real_decode(_make_ppm())
-    assert (f[0], f[1]) == (64, 48)
-    assert f[2] == pytest.approx(0.5, abs=0.01)   # mean R (x ramp)
-    assert f[3] == pytest.approx(0.5, abs=0.01)   # mean G (y ramp)
-    assert f[4] == pytest.approx(128 / 255, abs=0.01)  # constant B
-    assert f[5] > 0  # gray has variance
-
-    a = real_decode(_make_wav())
-    assert (a[0], a[1], a[2]) == (1, 8000, 800)
-    assert a[3] == pytest.approx(0.5 / np.sqrt(2), abs=0.01)  # sine RMS
-    assert a[4] > 0.05  # 440 Hz crosses zero often
-
-    with pytest.raises(ValueError):
-        real_decode(b"GIF89a not supported")
-
-
-def test_real_decode_through_spark_plumbing(spark):
-    """extract_features(decoder=real_decode) runs the real decoders inside
-    the Arrow-batched mapInPandas stage — same plumbing as the fake."""
-    from sqllog_analysis_spark.operators.multimodal import real_decode
-
-    rows = [
-        (1, "image", bytearray(_make_ppm()), "image/x-portable-pixmap", 64, 48, None),
-        (2, "audio", bytearray(_make_wav()), "audio/wav", None, None, 100),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {
-        r["media_id"]: r
-        for r in extract_features(media, decoder=real_decode).collect()
-    }
-    assert out[1]["feature"][0] == 64 and out[1]["feature"][1] == 48
-    assert out[2]["feature"][1] == 8000
-    assert out[1]["n_bytes"] == len(_make_ppm())
-
-
 def test_dup_clusters_components(spark):
     """Label propagation finds full components: a triangle-free chain and a
     separate pair; cluster_id is the component's min doc id."""
@@ -665,55 +595,6 @@ def test_minhash_incremental_matches_full(spark, tmp_path):
                                shingle_k=3)
 
 
-def test_embedding_incremental_matches_full(spark, tmp_path):
-    """Embedding-side incremental exactness: pairs(increment vs index) ==
-    full lsh_near_dup_pairs over (old ∪ new) restricted to new-touching
-    pairs, with the bucket cap binding on the union."""
-    rng = np.random.default_rng(5)
-    base = rng.standard_normal((10, 12))
-    old_rows, new_rows = [], []
-    for i in range(80):
-        v = base[i % 10] + 0.03 * rng.standard_normal(12)
-        old_rows.append((i, v.tolist()))
-    for i in range(12):
-        v = base[i % 10] + 0.03 * rng.standard_normal(12)
-        new_rows.append((1000 + i, v.tolist()))
-    old = spark.createDataFrame(old_rows, "vec_id long, embedding array<double>")
-    new = spark.createDataFrame(new_rows, "vec_id long, embedding array<double>")
-    both = old.unionByName(new)
-
-    idx = str(tmp_path / "emb_index")
-    SIM.write_embedding_index(old, idx, dim=12, bits=5, seeds=2)
-
-    new_ids = {r[0] for r in new_rows}
-    for cap in (1000, 12):
-        inc = {
-            (r["a"], r["b"]): (r["cosine"], r["a_is_new"], r["b_is_new"])
-            for r in SIM.lsh_near_dup_pairs_incremental(
-                new, idx, threshold=0.9, max_bucket=cap
-            ).collect()
-        }
-        full = {
-            (r["a"], r["b"]): r["cosine"]
-            for r in SIM.lsh_near_dup_pairs(
-                both, dim=12, threshold=0.9, bits=5, seeds=2, max_bucket=cap
-            ).collect()
-        }
-        want = {p: c for p, c in full.items()
-                if p[0] in new_ids or p[1] in new_ids}
-        assert {p: v[0] for p, v in inc.items()} == want and len(want) > 0
-        for (a, b), (_, an, bn) in inc.items():
-            assert an == (a in new_ids) and bn == (b in new_ids)
-    # old-old pairs exist in the full run but are never recomputed
-    assert any(a not in new_ids and b not in new_ids for a, b in full)
-
-    # append + param-mismatch guard
-    SIM.write_embedding_index(new, idx, dim=12, bits=5, seeds=2, mode="append")
-    assert spark.read.parquet(idx).select("vec_id").distinct().count() == 92
-    with pytest.raises(ValueError, match="built with"):
-        SIM.write_embedding_index(new, idx, dim=12, bits=6, seeds=2, mode="append")
-
-
 def test_dup_clusters_incremental_matches_full(spark, tmp_path):
     """Union-find merge exactness: incremental clustering (old star edges
     ∪ new-touching pairs) == full CC over ALL pairs, for every doc the
@@ -1025,56 +906,6 @@ def test_interval_join_rejects_column_collision(spark):
     )
     with pytest.raises(ValueError, match="collide"):
         interval_join(left, right, on="user_id")
-
-
-def test_asof_join_bucketed_equals_plain_on_random_corpus(spark):
-    from datetime import datetime as DT, timedelta
-
-    from sqllog_analysis_spark.operators.asof import asof_join, asof_join_bucketed
-
-    rng = np.random.default_rng(7)
-    base = DT(2025, 1, 1)
-    left = [
-        (i, f"u{rng.integers(0, 5)}", base + timedelta(seconds=int(rng.integers(0, 50_000))))
-        for i in range(400)
-    ]
-    # unique (key, ts) on the right: deterministic distinct offsets
-    right = [
-        (f"u{k}", base + timedelta(seconds=int(s)), int(k * 1000 + s))
-        for k in range(5)
-        for s in rng.choice(50_000, size=40, replace=False)
-    ]
-    ldf = spark.createDataFrame(left, "event_id long, user_id string, ts timestamp")
-    rdf = spark.createDataFrame(right, "user_id string, ts timestamp, ref long")
-    plain = {(r.event_id): r.ref for r in asof_join(ldf, rdf, on="user_id").collect()}
-    for bucket in (600, 3600, 100_000):  # incl. one bucket ≫ the whole span
-        bucketed = {
-            (r.event_id): r.ref
-            for r in asof_join_bucketed(
-                ldf, rdf, on="user_id", bucket_seconds=bucket
-            ).collect()
-        }
-        assert bucketed == plain, f"bucket={bucket}"
-
-
-def test_asof_join_bucketed_carry_in_across_empty_buckets(spark):
-    from datetime import datetime as DT
-
-    from sqllog_analysis_spark.operators.asof import asof_join_bucketed
-
-    # right row at t=0; left rows many EMPTY buckets later still match it
-    left = spark.createDataFrame(
-        [(1, "u", DT(2025, 1, 3, 12, 0, 0)), (2, "u", DT(2025, 1, 1, 0, 0, 0))],
-        "event_id long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [("u", DT(2025, 1, 1, 0, 0, 0), 42)],
-        "user_id string, ts timestamp, ref long",
-    )
-    out = {r.event_id: r.ref
-           for r in asof_join_bucketed(left, right, on="user_id",
-                                       bucket_seconds=600).collect()}
-    assert out == {1: 42, 2: 42}  # exact-tie AND 350-buckets-later carry
 
 
 def test_py_shingles_matches_spark_expression(spark):

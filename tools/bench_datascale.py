@@ -1,10 +1,11 @@
 """Data-size scaling: identical pipeline, identical parallelism, corpus
 grown 20× — throughput should hold roughly flat (linear scaling in data).
 
-Complements tools/bench_scaling.py (which varies CORES at fixed data):
-a pipeline can only claim 100 TB readiness if per-core throughput does
-not degrade as the corpus grows — i.e. no super-linear stage (quadratic
-join, driver-side accumulation, per-run fixed cost amortized away).
+Complements perfbench's pipeline.scaling_eff_1to4 (which varies CORES
+at fixed data): a pipeline can only claim 100 TB readiness if per-core
+throughput does not degrade as the corpus grows — i.e. no super-linear
+stage (quadratic join, driver-side accumulation, per-run fixed cost
+amortized away).
 
 Writes BENCH/DATASCALE.md.  Usage: python tools/bench_datascale.py
 """

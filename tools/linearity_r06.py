@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tools.profile_r06 import get_session  # noqa: E402
+from tools.verify_equiv import get_session  # noqa: E402
 
 
 def main() -> None:

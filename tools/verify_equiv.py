@@ -20,6 +20,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def get_session():
+    """The session both ``save`` and ``check`` run in: AQE off and 8 MB
+    input splits, so the plans do not vary with runtime statistics."""
+    from sqllog_analysis_spark.session import get_spark
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return get_spark(
+        "verify_equiv",
+        cores=cpus,
+        shuffle_partitions=max(8, cpus),
+        extra_conf={
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.files.maxPartitionBytes": "8m",
+        },
+    )
+
+
 def snap(df):
     rows = [tuple(r) for r in df.collect()]
     rows.sort(key=lambda t: tuple((v is None, str(type(v)), str(v)) for v in t))
@@ -32,7 +49,6 @@ def main() -> None:
     names = sys.argv[4:]
 
     import __spark_entry__ as entry
-    from tools.profile_r06 import get_session
 
     spark = get_session()
     qs = entry.queries()
