@@ -17,6 +17,12 @@ Design: per Arrow batch, rows are split into
 Both paths produce identical semantics; pytest cross-checks the fast path
 against the oracle on every grammar class (tests/test_spark_parser.py).
 
+The pipeline's parse (``parse_transcripts(by_conversation=True)``) also
+applies the conversation-level degenerate-input rule (io.rs:147-167) in
+the same partition iterator, on ``parse_batch``'s output: its input holds
+each conversation contiguous in one partition, so the rule needs no
+shuffle, join or second pass (``_by_conversation``).
+
 Scale note: this operator is *narrow* (no shuffle) — it scales linearly
 with input partitions, which is what the ≥0.8 two-cluster-size scaling
 efficiency requirement needs.  Regexes compile once per Python worker
@@ -240,8 +246,8 @@ def _slow_parse(pdf: pd.DataFrame) -> pd.DataFrame:
             # whitespace-only) must still be visible to the conversation-level
             # degenerate rule (io.rs:104-107 skips only 0-byte FILES; a
             # whitespace-only file still gets the synthetic 无有效日志行).
-            # Identified downstream by error IS NULL AND occurrence_time IS
-            # NULL; never routed as a record.
+            # Identified by error IS NULL AND occurrence_time IS NULL;
+            # _by_conversation drops it, and it is never routed as a record.
             rows.append({**base, **_EMPTY, "rec_idx": 0})
     return pd.DataFrame(rows, columns=_PARSED_COLS)
 
@@ -363,11 +369,113 @@ def parse_batch(pdf: pd.DataFrame, passthrough: list[str] | None = None) -> pd.D
     return out[out_cols]
 
 
-def parse_transcripts(transcripts_df):
+# the synthetic parse_errors row of a conversation with no valid timestamp
+# line and no critical error (io.rs:147-167): line 0, 未知错误: 无有效日志行
+_NO_VALID_LINE_ROW = {
+    **_EMPTY,
+    "error": f"未知错误: {oracle.NO_VALID_LINE}",
+    "error_class": "Other",
+    "error_line": 0,
+    "raw": oracle.NO_VALID_LINE,
+}
+
+
+def _not_grouped(conv_id, prev) -> None:
+    raise ValueError(
+        "parse input is not grouped by conv_id: "
+        f"conv_id={conv_id!r} follows {prev!r} in one partition"
+    )
+
+
+def _apply_rule(out: pd.DataFrame, starts: np.ndarray, ok: np.ndarray) -> pd.DataFrame:
+    """The degenerate-input rule (io.rs:147-167) on complete conversations.
+
+    ``starts`` are the first row of each conversation in ``out``, ``ok``
+    whether it has a turn with a valid timestamp line.  Such a
+    conversation keeps its records and errors; the sentinel rows of
+    zero-output turns go.  One without keeps only its errors when one of
+    them is critical (Utf8-class: the reference hands the whole error list
+    to its error hook), else becomes one synthetic row at its first turn.
+    """
+    err = out["error"].notna().to_numpy()
+    if ok.all():
+        keep = err | out["occurrence_time"].notna().to_numpy()
+        return out if keep.all() else out[keep]
+    sizes = np.diff(np.append(starts, len(out)))
+    critical = np.logical_or.reduceat((out["error_class"] == "Utf8").to_numpy(), starts)
+    row_ok, row_crit = np.repeat(ok, sizes), np.repeat(critical, sizes)
+    first = np.zeros(len(out), dtype=bool)
+    first[starts] = True
+    keep = np.where(
+        row_ok, err | out["occurrence_time"].notna().to_numpy(),
+        np.where(row_crit, err, first),
+    )
+    synth = (first & ~row_ok & ~row_crit)[keep]
+    out = out[keep].reset_index(drop=True)
+    # a conversation's first row is its first turn's rec_idx 0 row
+    for c, v in _NO_VALID_LINE_ROW.items():
+        out.loc[synth, c] = v
+    return out
+
+
+def _by_conversation(parsed: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Apply the degenerate-input rule to the parsed batches of one
+    partition that holds whole conversations, contiguous and in turn
+    order (``parse_stage``'s exchange + sort).
+
+    The last conversation of a batch may continue in the next one.  It is
+    released as soon as one of its turns has a valid timestamp line, so
+    only a prefix without one is ever held back.  ``conv_id`` must not
+    decrease within the partition: Python's ``str`` order is Spark's
+    UTF-8 binary sort order."""
+    open_id, open_ok, held = None, False, None
+    for out in parsed:
+        if not len(out):
+            continue
+        conv = out["conv_id"].to_numpy(dtype=object)
+        if open_id is not None and conv[0] < open_id:
+            _not_grouped(conv[0], open_id)
+        down = np.flatnonzero(conv[1:] < conv[:-1])
+        if len(down):
+            _not_grouped(conv[down[0] + 1], conv[down[0]])
+        cont = conv[0] == open_id
+        if held is not None:
+            if cont:
+                out = pd.concat([held, out], ignore_index=True)
+                conv = out["conv_id"].to_numpy(dtype=object)
+            else:
+                yield _apply_rule(held, np.array([0]), np.array([False]))
+            held = None
+        new = np.ones(len(conv), dtype=bool)
+        new[1:] = conv[1:] != conv[:-1]
+        starts = np.flatnonzero(new)
+        ok = np.logical_or.reduceat(out["has_ts"].to_numpy(dtype=bool), starts)
+        ok[0] |= cont and open_ok
+        open_id, open_ok = conv[-1], bool(ok[-1])
+        if not open_ok:
+            # the open conversation has no timestamp line yet: hold it
+            held = out.iloc[starts[-1]:].reset_index(drop=True)
+            out, starts, ok = out.iloc[: starts[-1]], starts[:-1], ok[:-1]
+        if len(out):
+            yield _apply_rule(out, starts, ok)
+    if held is not None:
+        yield _apply_rule(held, np.array([0]), np.array([False]))
+
+
+def parse_transcripts(transcripts_df, by_conversation: bool = False):
     """transcripts DataFrame → parsed DataFrame (PARSED_SCHEMA rows).
 
     Narrow map — preserves the input partitioning and row order; no
     shuffle.
+
+    ``by_conversation=True`` asserts that each partition holds whole
+    conversations, contiguous and in turn order — what ``parse_stage``
+    delivers — and applies the conversation-level degenerate-input rule
+    in the same Python task (``_by_conversation``): the output has no
+    sentinel rows, and a conversation with no valid timestamp line keeps
+    only its errors or one synthetic 无有效日志行 row.  Without it, every
+    turn is parsed on its own, in any order, and zero-output turns keep
+    their sentinel row.
 
     ``parse_batch`` checks turn-key uniqueness within one Arrow batch; the
     partition iterator also compares each batch's first key with the
@@ -388,4 +496,5 @@ def parse_transcripts(transcripts_df):
                 last = (pdf["conv_id"].iat[-1], pdf["turn_idx"].iat[-1])
             yield parse_batch(pdf)
 
-    return transcripts_df.select(*cols).mapInPandas(run, schema=PARSED_SCHEMA)
+    fn = (lambda batches: _by_conversation(run(batches))) if by_conversation else run
+    return transcripts_df.select(*cols).mapInPandas(fn, schema=PARSED_SCHEMA)

@@ -11,15 +11,17 @@ codegen-friendly pass, no UDF:
           > chat       (everything else)
 
 Parse failures go to the ``parse_errors`` sink with the reference's
-{path, line, error, raw} shape (error_writer.rs:147-152), after the
-conversation-level degenerate-input rule (io.rs:147-167) is applied.
+{path, line, error, raw} shape (error_writer.rs:147-152).  The
+conversation-level degenerate-input rule (io.rs:147-167) is not applied
+here: it runs inside the parse (functions/parse.py ``_by_conversation``),
+where each conversation is already contiguous in one partition, so the
+parsed rows this module sees already hold the rule's verdict and no join,
+aggregate or union is spent on it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from sqllog_analysis_spark.oracle import NO_VALID_LINE
 
 ERR_CODE_RE = r"ERR\[(-?\d+)\]"
 TOOL_CALL_RE = r"TOOL_CALL: (\w+)\("
@@ -29,9 +31,9 @@ def route_records(parsed: DataFrame, slow_ms: int = 1000) -> DataFrame:
     """Add ``category`` (+ extracted ``err_code`` / ``tool_called``) to
     successfully parsed rows.  Pure column expressions → whole-stage codegen.
     """
-    # occurrence_time guard drops the no-output sentinel rows (turns that
-    # produced neither records nor errors; they exist only for the
-    # conversation-level degenerate rule)
+    # occurrence_time guard drops the no-output sentinel rows of a
+    # per-turn parse (turns that produced neither records nor errors);
+    # parse_stage's output has none left
     rec = parsed.filter(
         F.col("error").isNull() & F.col("occurrence_time").isNotNull()
     )
@@ -48,80 +50,6 @@ def route_records(parsed: DataFrame, slow_ms: int = 1000) -> DataFrame:
             .otherwise("chat"),
         )
     )
-
-
-def degenerate_convs(parsed: DataFrame) -> DataFrame:
-    """Conversations where no turn ever contained a valid timestamp line
-    (the graft's analog of a file with no valid log line, io.rs:147-167).
-
-    Partial-aggregated map-side, so the shuffle carries ≤ one row per
-    (conversation, partition); the result is tiny and broadcastable.
-    """
-    return (
-        parsed.groupBy("conv_id")
-        .agg(F.max("has_ts").alias("conv_has_ts"))
-        .filter(~F.col("conv_has_ts"))
-        .select("conv_id")
-    )
-
-
-def route_errors(
-    parsed: DataFrame,
-    degen: DataFrame | None = None,
-    errors: DataFrame | None = None,
-) -> DataFrame:
-    """parse_errors sink rows {path, line, error, raw} with the
-    degenerate-conversation rule applied:
-
-    - normal conversations: every collected error routes through;
-    - degenerate conversations (no valid timestamp line anywhere): if the
-      conversation collected at least one critical (Utf8-class) error, ALL
-      of its collected errors pass through (io.rs:159-160 hands the full
-      chunk_errors list to err_hook, Format errors included); if none,
-      exactly one synthetic ``(0, 无有效日志行)`` row is emitted
-      (io.rs:147-167).  Their parsed records (possible via mid-segment
-      regex matches) are dropped too — see route_records_clean.
-    """
-    if degen is None:
-        degen = degenerate_convs(parsed)
-    if errors is None:
-        # callers may pass (and persist) this frame so the three error
-        # subtrees below share one scan (r6; run_pipeline does)
-        errors = parsed.filter(F.col("error").isNotNull())
-
-    normal = errors.join(F.broadcast(degen), "conv_id", "left_anti")
-    degen_errors = errors.join(F.broadcast(degen), "conv_id", "left_semi")
-    critical_convs = (
-        degen_errors.filter(F.col("error_class") == "Utf8")
-        .select("conv_id")
-        .distinct()
-    )
-    degen_critical = degen_errors.join(
-        F.broadcast(critical_convs), "conv_id", "left_semi"
-    )
-    synthetic = (
-        degen.join(critical_convs, "conv_id", "left_anti")
-        .select(
-            F.col("conv_id").alias("path"),
-            F.lit(0).cast("long").alias("line"),
-            F.lit(f"未知错误: {NO_VALID_LINE}").alias("error"),
-            F.lit(NO_VALID_LINE).alias("raw"),
-        )
-    )
-    shape = lambda df: df.select(  # noqa: E731
-        F.col("conv_id").alias("path"),
-        F.col("error_line").alias("line"),
-        "error",
-        "raw",
-    )
-    return shape(normal).unionByName(shape(degen_critical)).unionByName(synthetic)
-
-
-def route_records_clean(routed: DataFrame, degen: DataFrame) -> DataFrame:
-    """Drop records from degenerate conversations (the reference discards a
-    degenerate file's chunk without calling the record hook, io.rs:147-167).
-    """
-    return routed.join(F.broadcast(degen), "conv_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -4,22 +4,25 @@ Mirrors the reference CLI's flagship path (src/app.rs:105-182 →
 duckdb_impl.rs:796-936) restated Spark-first:
 
   transcripts ──exchange(conv_id) + sort(conv_id, turn_idx)──► ordered turns
-      └► parse (Arrow-vectorized mapInPandas, narrow)
+      └► parse (Arrow-vectorized mapInPandas, narrow) + the
+               conversation-level degenerate rule, in the same iterator
       └► STAGE: one columnar write of the parsed output (run_pipeline)
       └► enrich (broadcast dim join)
-      └► route  (when-chain category + parse_errors split,
-                 conversation-level degenerate rule)
+      └► route  (when-chain category + parse_errors projection)
       └► sinks  (one partitioned parquet fan-out + JSONL errors)
-      └► aggregates (per-sink counts, conv × time-bucket rollups)
+      └► aggregates (conv × time-bucket rollups; per-sink counts from
+                     the records files' footers)
       └► manifest (per-stage fingerprint + per-partition lineage → resume)
 
 Shuffle budget: the parse stage has ONE exchange of the full data (hash
-by conv_id, then a per-partition (conv_id, turn_idx) sort); enrich and
-route are narrow on top of the staged scan, the degenerate-conv flags
-aggregation reads only (conv_id, has_ts) from the staged columnar output,
-and every join against driver-small sides is broadcast.  The records sink
-adds one more, deliberate exchange: the salted (category, dt) repartition
-that bounds files per sink partition (sinks/writers.py).
+by conv_id, then a per-partition (conv_id, turn_idx) sort).  That puts
+every conversation in one partition, contiguous and in turn order, so the
+degenerate-input rule (io.rs:147-167) runs inside the parse's partition
+iterator, as the reference applies it per file inside its reader; enrich
+and route are narrow on top of the staged scan, and the only join is the
+broadcast of the 24-row lookup dim.  The records sink adds one more,
+deliberate exchange: the salted (category, dt) repartition that bounds
+files per sink partition (sinks/writers.py).
 
 Scale design: the parse stage (the single most expensive stage) runs
 EXACTLY ONCE per run — its output is written to a staging parquet dir and
@@ -30,15 +33,23 @@ parse output, and (b) serialized a full driver barrier before any sink
 ran — the measured scaling-efficiency killer.  A staging write is the
 standard checkpoint pattern: it parallelizes like any other task work and
 adds no driver synchronization beyond the job boundary.
+
+Fixed cost: a warm 20k-turn run on local[4] is 12 Spark jobs and 44
+tasks, 4 of them Python (33 jobs and 150 tasks while the degenerate rule
+ran as a JVM join/aggregate/union graph and sink_counts was a Spark
+job); the pipeline reads its own outputs with their known schema, so no
+footer-inference job runs either.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sqllog_analysis_spark.functions.parse import parse_transcripts
@@ -49,24 +60,21 @@ from sqllog_analysis_spark.operators.aggregates import (
 )
 from sqllog_analysis_spark.sinks.lineage import (
     jsonl_lineage,
-    parquet_file_count,
     parquet_lineage,
     path_exists,
     read_parquet_table,
+    write_parquet_table,
 )
 from sqllog_analysis_spark.operators.enrich import enrich_with_dim
 from sqllog_analysis_spark.operators.routing import (
-    degenerate_convs,
-    route_errors,
     route_records,
-    route_records_clean,
     split_sink_contract,
 )
-from sqllog_analysis_spark.schema import DIM_SCHEMA
+from sqllog_analysis_spark.schema import DIM_SCHEMA, PARSED_SCHEMA
 from sqllog_analysis_spark.session import scan_partitions
 from sqllog_analysis_spark.sinks.manifest import Manifest, fingerprint_input
 from sqllog_analysis_spark.sinks.writers import (
-    write_aggregates,
+    records_frame,
     write_category_sinks,
     write_error_sink,
 )
@@ -75,6 +83,13 @@ from sqllog_analysis_spark.sources.transcripts import role_tool_dim_rows
 
 # run_pipeline's stages, in the order its summary reports them
 STAGES = ("parsed", "records", "parse_errors", "aggregates")
+
+# what staged_parsed holds, folded into the resume fingerprint: a stage
+# written in another format (before the degenerate rule moved into the
+# parse, it held sentinel rows and no synthetic ones) is recomputed
+STAGED_FORMAT = "by-conversation-1"
+
+SINK_COUNTS_SCHEMA = pa.schema([("category", pa.string()), ("n", pa.int64())])
 
 
 @dataclass
@@ -136,7 +151,8 @@ def parse_stage(
     return parse_transcripts(
         transcripts.repartition(n, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
-        )
+        ),
+        by_conversation=True,
     )
 
 
@@ -149,27 +165,27 @@ def downstream(
 ) -> dict[str, DataFrame]:
     """Everything after the parse stage, as a pure transformation graph.
 
-    ``parsed`` is ideally a staged (already materialized) source so the
-    branches below share its scan instead of re-running the parse.
+    ``parsed`` is :func:`parse_stage`'s output, which has the
+    conversation-level degenerate rule applied already; ideally a staged
+    (already materialized) source so the branches below share its scan
+    instead of re-running the parse.
 
-    ``error_rows`` is NOT the full parsed width: it is the 5-column
-    projection (conv_id, error_line, error, raw, error_class) of the rows
-    with a parse error — exactly what ``route_errors`` consumes."""
+    ``error_rows`` is the 5-column projection (conv_id, error_line, error,
+    raw, error_class) of the rows with a parse error, and ``errors`` its
+    {path, line, error, raw} sink shape.  ``degen`` lists the conversations
+    that got the synthetic 无有效日志行 row (the only rows of class
+    ``Other``)."""
     if dim is None:
         dim = load_dim(spark)
-    degen = degenerate_convs(parsed)
-    routed = route_records_clean(
-        route_records(enrich_with_dim(parsed, dim), slow_ms=slow_ms), degen
-    )
-    # projected to exactly the columns the error union consumes (shape +
-    # the critical-class split): when run_pipeline persists this frame,
-    # the cache fill scans 5 columns of the staged parquet instead of the
-    # full parsed width (guide §2.3 — project before the opaque boundary;
-    # measured −9% on the isolated errors chain at 2M turns)
+    routed = route_records(enrich_with_dim(parsed, dim), slow_ms=slow_ms)
     error_rows = parsed.filter(F.col("error").isNotNull()).select(
         "conv_id", "error_line", "error", "raw", "error_class"
     )
-    errors = route_errors(parsed, degen, errors=error_rows)
+    errors = error_rows.select(
+        F.col("conv_id").alias("path"), F.col("error_line").alias("line"),
+        "error", "raw",
+    )
+    degen = parsed.filter(F.col("error_class") == "Other").select("conv_id")
     return {
         "parsed": parsed,
         "degen": degen,
@@ -217,7 +233,8 @@ def build_staged(
         parse_stage(spark, transcripts, target_partitions).write.mode(
             "overwrite"
         ).parquet(stage_dir)
-    parsed = spark.read.parquet(stage_dir)
+    # the known schema: no footer-inference job
+    parsed = spark.read.schema(PARSED_SCHEMA).parquet(stage_dir)
     g = downstream(spark, parsed, dim, slow_ms=slow_ms, bucket=bucket)
     g["transcripts"] = transcripts
     return g
@@ -248,6 +265,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             "bucket": cfg.bucket,
             "target_partitions": cfg.target_partitions,
             "input_format": cfg.input_format,
+            "staged_format": STAGED_FORMAT,
             **cfg.conf,
         },
     )
@@ -348,35 +366,36 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     def run_aggregates() -> None:
         t0 = time.perf_counter()
-        # aggregate over the WRITTEN records sink, not a recompute: the
-        # enrich/route chain runs exactly once (inside the records write);
-        # these groupBys are column-pruned scans of the columnar sink —
-        # at 100 TB that is the difference between re-routing the corpus
-        # twice and reading 3 columns of it
         rec_dir = os.path.join(cfg.output_dir, "records")
-        routed_src = (
-            spark.read.parquet(rec_dir)
-            if parquet_file_count(rec_dir)
-            # zero-record edge (empty dir has no schema): fall back to the
+        rec_files = parquet_lineage(rec_dir)
+        if rec_files:
+            # conv_buckets aggregates over the WRITTEN records sink, not a
+            # recompute: the enrich/route chain runs exactly once (inside
+            # the records write), and this groupBy is a column-pruned scan
+            # of the columnar sink, read with its known schema (no
+            # footer-inference job).  sink_counts is the files' footer
+            # row counts summed per category= directory: facts the driver
+            # already holds, no job
+            routed_src = spark.read.schema(records_frame(writable).schema).parquet(rec_dir)
+            n = Counter()
+            for f in rec_files:
+                part = dict(d.split("=", 1) for d in f["file"].split("/")[:-1] if "=" in d)
+                n[part["category"]] += f["row_count"]
+        else:
+            # no records files (zero records, or an Iceberg sink): the
             # post-contract-split branch, NOT g["routed"] — rows excluded
             # by sink-write isolation must not reappear in the aggregates
-            else writable
+            routed_src = writable
+            n = {r["category"]: r["n"] for r in agg_sink_counts(writable).collect()}
+        agg_conv_buckets(routed_src, bucket=cfg.bucket).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(cfg.output_dir, "conv_buckets"))
+        counts_dir = os.path.join(cfg.output_dir, "sink_counts")
+        write_parquet_table(
+            pa.table({"category": list(n), "n": list(n.values())}, schema=SINK_COUNTS_SCHEMA),
+            counts_dir,
         )
-        # r6: conv_buckets is written from ONE records-sink scan, and
-        # sink_counts is then derived from the written conv_buckets table
-        # (sum of per-(conv, bucket) counts per category == count(*) per
-        # category) — a KB-scale read instead of a second sink scan
-        cb = agg_conv_buckets(routed_src, bucket=cfg.bucket)
-        cb.write.mode("overwrite").parquet(
-            os.path.join(cfg.output_dir, "conv_buckets")
-        )
-        sc_src = spark.read.parquet(os.path.join(cfg.output_dir, "conv_buckets"))
-        write_aggregates(
-            sc_src.groupBy("category").agg(F.sum("n").alias("n")),
-            None,
-            cfg.output_dir,
-        )
-        lineage = parquet_lineage(os.path.join(cfg.output_dir, "sink_counts"))
+        lineage = parquet_lineage(counts_dir)
         commit("aggregates", lineage, sum(p["row_count"] for p in lineage), t0)
 
     # two independent driver-side chains over the staged scan, run
@@ -403,26 +422,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    # the degenerate-conversation frame is referenced by FOUR broadcast
-    # subtrees across the two concurrent chains; without materialization
-    # each broadcast re-runs the (conv_id, has_ts) aggregate over the
-    # staged scan.  It is tiny by construction (one row per conversation
-    # with no valid timestamp line), so persist + one eager fill makes
-    # every broadcast a cache read (r6; guide §2.4 — share one exchange).
-    # error_rows backs THREE subtrees of the error union (normal /
-    # degen-critical / synthetic sources); persisting it (lazily — the
-    # errors job is its only consumer, and the in-memory relation fills
-    # once within that job) collapses three pruned staged scans into one
-    g["degen"].persist()
-    g["error_rows"].persist()
-    try:
-        g["degen"].count()
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            for f in [ex.submit(chain_records), ex.submit(chain_errors)]:
-                f.result()  # propagate failures
-    finally:
-        g["degen"].unpersist()
-        g["error_rows"].unpersist()
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        for f in [ex.submit(chain_records), ex.submit(chain_errors)]:
+            f.result()  # propagate failures
 
     # summary inputs come from written files / footers, not extra jobs
     # (fs-abstracted: works for local dirs and remote URIs alike)

@@ -80,13 +80,6 @@ def parquet_lineage(path: str) -> list[dict]:
         return list(ex.map(footer, files))
 
 
-def parquet_file_count(path: str) -> int:
-    """Cheap existence/size probe: number of parquet files under ``path``
-    (no footer reads) — for 'did this sink write anything' checks."""
-    fs, root = _resolve(path)
-    return len(_list_files(fs, root, ".parquet", recursive=True))
-
-
 def read_parquet_table(path: str):
     """Driver-side read of a SMALL parquet output (e.g. the 4-row
     sink_counts) through the same fs abstraction — works for local paths
@@ -96,6 +89,16 @@ def read_parquet_table(path: str):
     import pyarrow.dataset as ds
 
     return ds.dataset(files, filesystem=fs).to_table()
+
+
+def write_parquet_table(table, path: str) -> None:
+    """Driver-side write of a SMALL table (e.g. sink_counts) as the one
+    parquet file of directory ``path``, replacing what it held — the
+    write-side twin of :func:`read_parquet_table`, no Spark job."""
+    fs, root = _resolve(path)
+    fs.create_dir(root)
+    fs.delete_dir_contents(root)
+    pq.write_table(table, f"{root}/part-00000.parquet", filesystem=fs)
 
 
 def path_exists(path: str) -> bool:

@@ -49,6 +49,12 @@ _ERROR_PATH_COLS = ("error", "error_class", "error_line", "raw")
 SALT_MIN_ROWS = 0
 
 
+def records_frame(routed: DataFrame) -> DataFrame:
+    """The rows the records sink writes: routed records without the
+    error-path columns, plus the ``dt`` partition column."""
+    return routed.drop(*_ERROR_PATH_COLS).withColumn("dt", F.to_date("ts"))
+
+
 def write_category_sinks(
     routed: DataFrame,
     out_dir: str,
@@ -79,7 +85,7 @@ def write_category_sinks(
     """
     if fmt is None:
         fmt = sink_format(routed.sparkSession)
-    out = routed.drop(*_ERROR_PATH_COLS).withColumn("dt", F.to_date("ts"))
+    out = records_frame(routed)
     if row_count_hint is None or row_count_hint >= salt_min_rows:
         # bounded-files / bounded-task-size exchange (see module docstring).
         # Salt on a row-unique tuple: a mega-CONVERSATION spreads over the
@@ -120,10 +126,12 @@ def write_error_sink(errors: DataFrame, out_dir: str) -> None:
 def write_aggregates(
     sink_counts: DataFrame, conv_buckets: DataFrame | None, out_dir: str
 ) -> None:
-    """Aggregate writes.  ``conv_buckets=None`` (r6 pipeline path) means
-    the caller already wrote conv_buckets and sink_counts is derived from
-    it — one job, KB-scale input.  With both frames given, the two jobs
-    run concurrently from driver threads so their sink scans overlap."""
+    """Aggregate writes.  ``conv_buckets=None`` means the caller already
+    wrote conv_buckets.  With both frames given, the two jobs run
+    concurrently from driver threads so their sink scans overlap.
+    ``run_pipeline`` no longer calls this (it writes sink_counts on the
+    driver from the records footers); the benchmark's per-layer probe
+    (perfbench/layers.py) still does."""
     from concurrent.futures import ThreadPoolExecutor
 
     jobs = [

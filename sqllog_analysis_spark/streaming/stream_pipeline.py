@@ -144,23 +144,25 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
 
-        from sqllog_analysis_spark.functions.parse import parse_transcripts
         from sqllog_analysis_spark.operators.routing import split_sink_contract
-        from sqllog_analysis_spark.plans.pipeline import downstream
-        from sqllog_analysis_spark.sinks.writers import _ERROR_PATH_COLS
+        from sqllog_analysis_spark.plans.pipeline import downstream, parse_stage
+        from sqllog_analysis_spark.sinks.writers import records_frame
 
-        g = downstream(bdf.sparkSession, parse_transcripts(bdf), slow_ms=slow_ms)
+        # parse_stage puts each conversation in one partition, contiguous
+        # and in turn order, so the degenerate rule runs inside the parse
+        # as in batch mode.  Its width is the micro-batch's partition
+        # count, the task count of a parse straight over it; persisted for
+        # the batch, so every sink below shares ONE execution of the parse
+        # instead of re-running the graph per action
+        parsed = parse_stage(
+            bdf.sparkSession, bdf,
+            target_partitions=max(1, bdf.rdd.getNumPartitions()),
+        ).persist()
+        g = downstream(bdf.sparkSession, parsed, slow_ms=slow_ms)
         # category_total: route_records' when-chain is closed over
         # CATEGORIES, so the violation predicate is just the null checks
         writable, contract_bad = split_sink_contract(g["routed"], category_total=True)
-        # persisted for the batch: the records write AND the two partial
-        # sinks below share ONE execution of the Python parse instead of
-        # re-running the graph per action
-        writable = (
-            writable.drop(*_ERROR_PATH_COLS)  # all-NULL on routed records
-            .withColumn("dt", F.to_date("ts"))
-            .persist()
-        )
+        writable = records_frame(writable)
         (
             writable.sortWithinPartitions("category", "dt", "session", "thread", "trx_id")
             .write.mode("overwrite")
@@ -182,7 +184,7 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
         _write_batch_metrics(out_dir, batch_id, n_errors=int(obs.get["n"]))
         _write_digest_partial(writable, out_dir, batch_id)
         _write_latency_hist_partial(writable, out_dir, batch_id)
-        writable.unpersist()
+        parsed.unpersist()
 
     return write_batch
 

@@ -507,15 +507,15 @@ def test_run_pipeline_poison_partition_commits_rest(spark, tmp_path, monkeypatch
         .first()
     )
 
-    orig = P.route_records_clean
+    orig = P.route_records
 
-    def poisoned(routed, degen):
-        df = orig(routed, degen)
+    def poisoned(parsed, slow_ms=1000):
+        df = orig(parsed, slow_ms=slow_ms)
         return df.withColumn(
             "ts", F.when(F.col("conv_id") == victim.conv_id, None).otherwise(F.col("ts"))
         )
 
-    monkeypatch.setattr(P, "route_records_clean", poisoned)
+    monkeypatch.setattr(P, "route_records", poisoned)
     s_poison = run_pipeline(
         spark, PipelineConfig(input_path=inp, output_dir=out_poison)
     )
@@ -545,6 +545,42 @@ def test_fingerprint_covers_partitioning_config(spark, tmp_path):
     assert "parsed" in s2["stages_ran"]  # stale stage not reused
 
 
+def test_resume_recomputes_a_stage_of_the_older_format(spark, tmp_path):
+    """staged_parsed used to hold the per-turn parse (sentinel rows, no
+    synthetic 无有效日志行 rows), with the degenerate rule applied after
+    it.  A resume over such a stage, committed under that format's
+    fingerprint, must recompute it instead of losing the synthetic row."""
+    from sqllog_analysis_spark.functions.parse import parse_transcripts
+    from sqllog_analysis_spark.sinks.manifest import Manifest, fingerprint_input
+
+    hdr = "2025-01-01 00:00:00.000 (EP[1] sess:NULL thrd:1 user:u trxid:1 stmt:NULL) [SEL]: x"
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [("conv_a", 0, "user", "junk line", None, t0), ("conv_b", 0, "user", hdr, None, t0)]
+    inp = str(tmp_path / "transcripts.parquet")
+    spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(inp)
+    out = str(tmp_path / "out")
+
+    old_fp = fingerprint_input(
+        inp,
+        {"slow_ms": 1000, "bucket": "hour", "target_partitions": None,
+         "input_format": "transcripts"},
+    )
+    stage = parse_transcripts(spark.read.parquet(inp))
+    assert stage.filter(F.col("raw") == oracle.NO_VALID_LINE).count() == 0
+    stage.write.parquet(os.path.join(out, "staged_parsed"))
+    Manifest(os.path.join(out, "_manifest")).commit(
+        "parsed", old_fp, row_count=2, extra={"input_turns": 2}
+    )
+
+    s = run_pipeline(spark, PipelineConfig(input_path=inp, output_dir=out))
+    assert s["stages_ran"] == ["parsed", "records", "parse_errors", "aggregates"]
+    assert s["records_routed"] == 1 and s["parse_errors"] == 1
+    errs = spark.read.json(os.path.join(out, "parse_errors")).collect()
+    assert [(e["path"], e["line"], e["raw"]) for e in errs] == [
+        ("conv_a", 0, oracle.NO_VALID_LINE)
+    ]
+
+
 def test_lineage_many_files_parallel(tmp_path):
     """Footer lineage over a many-file dataset: correct per-file counts,
     wall time bounded by concurrent I/O rather than a sequential walk
@@ -554,7 +590,7 @@ def test_lineage_many_files_parallel(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sqllog_analysis_spark.sinks.lineage import parquet_file_count, parquet_lineage
+    from sqllog_analysis_spark.sinks.lineage import parquet_lineage
 
     d = tmp_path / "many"
     d.mkdir()
@@ -566,7 +602,6 @@ def test_lineage_many_files_parallel(tmp_path):
     wall = time.perf_counter() - t0
     assert len(lin) == n_files
     assert sum(p["row_count"] for p in lin) == sum(i % 7 + 1 for i in range(n_files))
-    assert parquet_file_count(str(d)) == n_files
     assert wall < 10.0  # threaded metadata reads, not a per-file serial scan
 
 

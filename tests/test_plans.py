@@ -311,3 +311,25 @@ def test_chunking_is_a_pure_projection(spark):
     txt = plan_text(chunk_documents(d, chunk_tokens=4, overlap=1))
     assert n_exchanges(txt) == 0
     assert "EvalPython" not in txt and "InPandas" not in txt
+
+
+def test_warm_run_pipeline_job_count(spark, tmp_path):
+    """A warm run_pipeline runs a fixed, small number of Spark jobs: the
+    degenerate-conversation rule runs inside the parse, sink_counts comes
+    from the records files' footers and the pipeline reads its own
+    outputs with their known schema.  A warm 20k-turn run on local[4]
+    went from 33 jobs to 12 with those changes; a new job in the batch
+    path fails here."""
+    from sqllog_analysis_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from sqllog_analysis_spark.sources.transcripts import write_transcripts
+
+    inp = str(tmp_path / "transcripts.parquet")
+    write_transcripts(inp, 2000, seed=3)
+    cfg = PipelineConfig(input_path=inp, output_dir=str(tmp_path / "out"), resume=False)
+    run_pipeline(spark, cfg)  # warm-up
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    s = run_pipeline(spark, cfg)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert s["records_routed"] > 0 and s["parse_errors"] > 0
+    assert 0 < len(jobs) <= 12, sorted(jobs)

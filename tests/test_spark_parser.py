@@ -188,3 +188,83 @@ def test_duplicate_turn_key_fails_loudly():
     dup = pd.concat([df, df.iloc[[0]]], ignore_index=True)
     with pytest.raises(ValueError, match="duplicate turn key"):
         parse_batch(dup)
+
+
+def _batch_rows(spark, n: int):
+    """Set the Arrow batch size of the parse UDF to ``n`` rows; returns
+    the old value."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    return old
+
+
+_HDR = "2025-01-01 00:00:00.000 (EP[1] sess:NULL thrd:1 user:u trxid:1 stmt:NULL) [SEL]: x"
+
+
+def _turns(rows) -> pd.DataFrame:
+    df = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
+    df["turn_idx"] = df["turn_idx"].astype("int32")
+    df["role"], df["tool"] = "user", None
+    df["ts"] = pd.Timestamp("2025-01-01") + pd.to_timedelta(df.index, unit="s")
+    df["ts"] = df["ts"].astype("datetime64[us]")
+    return df[["conv_id", "turn_idx", "role", "text", "tool", "ts"]]
+
+
+def test_degenerate_rule_across_arrow_batches(spark):
+    """3-row Arrow batches: [a0 b0 b1] [b2 c0 c1] [c2 d0].  Degenerate
+    conversation b straddles the first boundary and still yields exactly
+    ONE synthetic row, at its first turn.  Conversation c's only
+    timestamp line is in the last batch, so its first batch is held, then
+    released whole: the record embedded mid-line in c0 and the errors of
+    c1 are kept."""
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
+
+    df = _turns([
+        ("a", 0, _HDR),
+        ("b", 0, "junk line"), ("b", 1, "   "), ("b", 2, "more junk"),
+        ("c", 0, "junk " + _HDR), ("c", 1, "�garbage no timestamp"), ("c", 2, _HDR),
+        ("d", 0, _HDR),
+    ])
+    old = _batch_rows(spark, 3)
+    try:
+        got = parse_stage(
+            spark, spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA), target_partitions=1
+        ).toPandas()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    b = got[got.conv_id == "b"]
+    assert len(b) == 1
+    r = b.iloc[0]
+    assert (r.turn_idx, r.rec_idx, r.error_line, r.error_class, r.raw) == (
+        0, 0, 0, "Other", oracle.NO_VALID_LINE
+    )
+    assert r.error == f"未知错误: {oracle.NO_VALID_LINE}" and not r.has_ts
+
+    c = got[got.conv_id == "c"].reset_index(drop=True)
+    want = parse_batch(df[df.conv_id == "c"].reset_index(drop=True))
+    assert want.error.notna().sum() >= 1 and want.occurrence_time.notna().sum() == 2
+    assert_frames_equal(c[COMPARE_COLS], want[COMPARE_COLS])
+    # a and d: one record each, no sentinel rows anywhere
+    assert sorted(got[got.conv_id.isin(["a", "d"])].conv_id) == ["a", "d"]
+    assert not (got.error.isna() & got.occurrence_time.isna()).any()
+
+
+def test_parse_by_conversation_rejects_ungrouped_input(spark):
+    """The rule needs each conversation contiguous in its partition: a
+    conv_id that decreases, within one Arrow batch or across two, raises
+    instead of splitting a conversation into two verdicts."""
+    within = _turns([("a", 0, _HDR), ("c", 0, _HDR), ("b", 0, _HDR)])
+    across = _turns([("a", 0, _HDR), ("c", 0, _HDR), ("c", 1, _HDR), ("b", 0, _HDR)])
+    old = _batch_rows(spark, 3)
+    try:
+        for df in (within, across):
+            sdf = spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA).coalesce(1)
+            with pytest.raises(Exception, match="not grouped by conv_id"):
+                parse_transcripts(sdf, by_conversation=True).collect()
+        # the same rows sorted parse cleanly
+        ok = spark.createDataFrame(across.sort_values("conv_id"), schema=TRANSCRIPT_SCHEMA)
+        assert parse_transcripts(ok.coalesce(1), by_conversation=True).count() == 4
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

@@ -80,7 +80,8 @@ def expected_for(n_turns: int, seed: int = SEED) -> dict:
 
     degen = {c for c, h in conv_has_ts.items() if not h}
 
-    # records after the degenerate-conversation drop (route_records_clean)
+    # records after the degenerate-conversation drop (functions/parse.py
+    # _by_conversation)
     counts: dict[str, int] = {}
     max_exec: dict[str, int | None] = {}
     exemplars: dict[str, tuple] = {}
@@ -116,7 +117,7 @@ def expected_for(n_turns: int, seed: int = SEED) -> dict:
             if s not in exemplars or key > exemplars[s][0]:
                 exemplars[s] = (key, (r.execute_time, conv_id, turn_idx, rec_idx))
 
-    # route_errors: normal convs pass all; degenerate convs pass all iff a
+    # errors: normal convs pass all; degenerate convs pass all iff a
     # Utf8-class error exists, else exactly one synthetic row (io.rs:147-167)
     n_errors = 0
     for conv_id, errs in conv_errors.items():

@@ -1,11 +1,16 @@
 """Result-equivalence harness for the optimization round.
 
-  python tools/verify_equiv.py save <tag> [sf_dir] [q1 q2 ...]
+  python tools/verify_equiv.py save <snapshot_dir> [sf_dir] [q1 q2 ...]
       collect each query's full result (sorted rows + schema) and pickle
-      it under /tmp/equiv_<tag>/
-  python tools/verify_equiv.py check <tag> [sf_dir] [q1 q2 ...]
+      it under <snapshot_dir>/, one file per query
+  python tools/verify_equiv.py check <snapshot_dir> [sf_dir] [q1 q2 ...]
       re-run and compare against the saved snapshot; prints PASS/FAIL per
       query with the first differing row.
+
+The queries are those of the checkout this file sits in.  To snapshot
+another revision, run that revision's copy of this file (or copy this
+file into its tools/ directory).  Spark runs ``local[$SPARK_GRAFT_CPUS]``,
+or one thread per host core when the variable is unset.
 
 Rows are compared exactly (no float rounding): an optimization must be
 bit-identical, not merely close.
@@ -25,7 +30,7 @@ def get_session():
     input splits, so the plans do not vary with runtime statistics."""
     from sqllog_analysis_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     return get_spark(
         "verify_equiv",
         cores=cpus,
@@ -44,7 +49,7 @@ def snap(df):
 
 
 def main() -> None:
-    cmd, tag = sys.argv[1], sys.argv[2]
+    cmd, d = sys.argv[1], sys.argv[2]
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     names = sys.argv[4:]
 
@@ -53,7 +58,6 @@ def main() -> None:
     spark = get_session()
     qs = entry.queries()
     names = names or list(qs)
-    d = f"/tmp/equiv_{tag}"
     os.makedirs(d, exist_ok=True)
 
     failures = []
