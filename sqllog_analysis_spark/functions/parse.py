@@ -17,7 +17,7 @@ Design: per Arrow batch, rows are split into
 Both paths produce identical semantics; pytest cross-checks the fast path
 against the oracle on every grammar class (tests/test_spark_parser.py).
 
-The pipeline's parse (``parse_transcripts(by_conversation=True)``) also
+The Spark parse (``parse_transcripts``, called by ``parse_stage``) also
 applies the conversation-level degenerate-input rule (io.rs:147-167) in
 the same partition iterator, on ``parse_batch``'s output: its input holds
 each conversation contiguous in one partition, so the rule needs no
@@ -279,8 +279,7 @@ def parse_batch(pdf: pd.DataFrame, passthrough: list[str] | None = None) -> pd.D
     # dirty upstream with duplicates would silently emit each turn twice.
     # Fail loudly instead (the reference has no analog: its turn key is a
     # file byte offset, unique by construction).  One hash pass per batch,
-    # independent of row order, so follow mode's unsorted batches are
-    # checked too.
+    # independent of row order.
     dup = pdf.duplicated(["conv_id", "turn_idx"])
     if dup.any():
         k = pdf[dup].iloc[0]
@@ -387,6 +386,24 @@ def _not_grouped(conv_id, prev) -> None:
     )
 
 
+def _check_grouped(conv: np.ndarray, prev) -> None:
+    """Raise unless ``conv``, the conv_ids of one batch, has no null and
+    never decreases, also from ``prev``, the partition's last conv_id so
+    far.  Python's ``str`` order is Spark's UTF-8 binary sort order."""
+    if pd.isna(conv).any():
+        # the transcripts schema declares conv_id not null; the rule and
+        # every sink key on it
+        raise ValueError(
+            "null conv_id in transcripts input: conv_id is the conversation "
+            "key and must not be null"
+        )
+    if prev is not None and conv[0] < prev:
+        _not_grouped(conv[0], prev)
+    down = np.flatnonzero(conv[1:] < conv[:-1])
+    if len(down):
+        _not_grouped(conv[down[0] + 1], conv[down[0]])
+
+
 def _apply_rule(out: pd.DataFrame, starts: np.ndarray, ok: np.ndarray) -> pd.DataFrame:
     """The degenerate-input rule (io.rs:147-167) on complete conversations.
 
@@ -418,6 +435,15 @@ def _apply_rule(out: pd.DataFrame, starts: np.ndarray, ok: np.ndarray) -> pd.Dat
     return out
 
 
+def _held_piece(out: pd.DataFrame, conv_start: bool) -> pd.DataFrame:
+    """The rows of a conversation without a timestamp line so far that the
+    rule can still emit: its records and errors, and its first row (the
+    synthetic row's place).  Its other sentinel rows go now."""
+    keep = out["error"].notna().to_numpy() | out["occurrence_time"].notna().to_numpy()
+    keep[0] |= conv_start
+    return out[keep]
+
+
 def _by_conversation(parsed: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Apply the degenerate-input rule to the parsed batches of one
     partition that holds whole conversations, contiguous and in turn
@@ -425,64 +451,61 @@ def _by_conversation(parsed: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     The last conversation of a batch may continue in the next one.  It is
     released as soon as one of its turns has a valid timestamp line, so
-    only a prefix without one is ever held back.  ``conv_id`` must not
-    decrease within the partition: Python's ``str`` order is Spark's
-    UTF-8 binary sort order."""
-    open_id, open_ok, held = None, False, None
+    only a prefix without one is ever held back: as a list of pieces,
+    concatenated once when its verdict is known."""
+    open_id, open_ok, held = None, False, []
+    one, no = np.array([0]), np.array([False])
     for out in parsed:
         if not len(out):
             continue
         conv = out["conv_id"].to_numpy(dtype=object)
-        if open_id is not None and conv[0] < open_id:
-            _not_grouped(conv[0], open_id)
-        down = np.flatnonzero(conv[1:] < conv[:-1])
-        if len(down):
-            _not_grouped(conv[down[0] + 1], conv[down[0]])
-        cont = conv[0] == open_id
-        if held is not None:
-            if cont:
-                out = pd.concat([held, out], ignore_index=True)
-                conv = out["conv_id"].to_numpy(dtype=object)
-            else:
-                yield _apply_rule(held, np.array([0]), np.array([False]))
-            held = None
+        _check_grouped(conv, open_id)
         new = np.ones(len(conv), dtype=bool)
         new[1:] = conv[1:] != conv[:-1]
         starts = np.flatnonzero(new)
         ok = np.logical_or.reduceat(out["has_ts"].to_numpy(dtype=bool), starts)
-        ok[0] |= cont and open_ok
+        cont = conv[0] == open_id
+        if cont:
+            ok[0] |= open_ok
         open_id, open_ok = conv[-1], bool(ok[-1])
+        if held and not cont:
+            yield _apply_rule(pd.concat(held, ignore_index=True), one, no)
+            held = []
+        elif held and (ok[0] or len(starts) > 1):
+            # the held conversation's verdict is known: release it whole
+            stop = starts[1] if len(starts) > 1 else len(out)
+            yield _apply_rule(
+                pd.concat(held + [out.iloc[:stop]], ignore_index=True), one, ok[:1]
+            )
+            held = []
+            out, starts, ok = out.iloc[stop:], starts[1:] - stop, ok[1:]
         if not open_ok:
             # the open conversation has no timestamp line yet: hold it
-            held = out.iloc[starts[-1]:].reset_index(drop=True)
-            out, starts, ok = out.iloc[: starts[-1]], starts[:-1], ok[:-1]
+            s = starts[-1]
+            held.append(_held_piece(out.iloc[s:], conv_start=not held))
+            out, starts, ok = out.iloc[:s], starts[:-1], ok[:-1]
         if len(out):
             yield _apply_rule(out, starts, ok)
-    if held is not None:
-        yield _apply_rule(held, np.array([0]), np.array([False]))
+    if held:
+        yield _apply_rule(pd.concat(held, ignore_index=True), one, no)
 
 
-def parse_transcripts(transcripts_df, by_conversation: bool = False):
+def parse_transcripts(transcripts_df):
     """transcripts DataFrame → parsed DataFrame (PARSED_SCHEMA rows).
 
     Narrow map — preserves the input partitioning and row order; no
-    shuffle.
-
-    ``by_conversation=True`` asserts that each partition holds whole
-    conversations, contiguous and in turn order — what ``parse_stage``
-    delivers — and applies the conversation-level degenerate-input rule
-    in the same Python task (``_by_conversation``): the output has no
+    shuffle.  Its input must hold each conversation whole, contiguous and
+    in turn order within one partition, which ``parse_stage``'s exchange
+    and sort deliver: the same Python task applies the conversation-level
+    degenerate-input rule (``_by_conversation``), so the output has no
     sentinel rows, and a conversation with no valid timestamp line keeps
-    only its errors or one synthetic 无有效日志行 row.  Without it, every
-    turn is parsed on its own, in any order, and zero-output turns keep
-    their sentinel row.
+    only its errors or one synthetic 无有效日志行 row.  Input that is not
+    grouped by ``conv_id`` raises.
 
     ``parse_batch`` checks turn-key uniqueness within one Arrow batch; the
     partition iterator also compares each batch's first key with the
     previous batch's last, so the two adjacent copies of a duplicate in
-    ``parse_stage``'s sorted input are caught across a batch boundary too.
-    Two rows of unique-keyed input never share a key, so unsorted input
-    (follow mode) cannot trip the check falsely.
+    the sorted input are caught across a batch boundary too.
     """
     cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
 
@@ -496,5 +519,6 @@ def parse_transcripts(transcripts_df, by_conversation: bool = False):
                 last = (pdf["conv_id"].iat[-1], pdf["turn_idx"].iat[-1])
             yield parse_batch(pdf)
 
-    fn = (lambda batches: _by_conversation(run(batches))) if by_conversation else run
-    return transcripts_df.select(*cols).mapInPandas(fn, schema=PARSED_SCHEMA)
+    return transcripts_df.select(*cols).mapInPandas(
+        lambda batches: _by_conversation(run(batches)), schema=PARSED_SCHEMA
+    )

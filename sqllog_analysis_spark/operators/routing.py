@@ -31,9 +31,9 @@ def route_records(parsed: DataFrame, slow_ms: int = 1000) -> DataFrame:
     """Add ``category`` (+ extracted ``err_code`` / ``tool_called``) to
     successfully parsed rows.  Pure column expressions → whole-stage codegen.
     """
-    # occurrence_time guard drops the no-output sentinel rows of a
-    # per-turn parse (turns that produced neither records nor errors);
-    # parse_stage's output has none left
+    # a record is a row with no error and a timestamp; parse_stage's output
+    # has no sentinel rows (turns that produced neither), so the
+    # occurrence_time guard drops nothing there
     rec = parsed.filter(
         F.col("error").isNull() & F.col("occurrence_time").isNotNull()
     )

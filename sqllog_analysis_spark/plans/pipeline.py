@@ -151,8 +151,7 @@ def parse_stage(
     return parse_transcripts(
         transcripts.repartition(n, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
-        ),
-        by_conversation=True,
+        )
     )
 
 

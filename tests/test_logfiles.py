@@ -119,7 +119,7 @@ def test_chunked_reader_matches_whole_file_parse(spark, tmp_path):
     line (repair + resync, sqllog_tests.rs:674-699)."""
     from pyspark.sql import functions as F
 
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
+    from sqllog_analysis_spark.plans.pipeline import parse_stage
     from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
 
     text = _multi_segment_text()
@@ -137,7 +137,7 @@ def test_chunked_reader_matches_whole_file_parse(spark, tmp_path):
         .select("pid").distinct().count()
     )
     assert n_tasks > 1
-    got = parse_transcripts(tdf).toPandas()
+    got = parse_stage(spark, tdf).toPandas()
 
     import datetime as dt
 
@@ -150,7 +150,7 @@ def test_chunked_reader_matches_whole_file_parse(spark, tmp_path):
     )
     whole["turn_idx"] = whole["turn_idx"].astype("int32")
     sdf = spark.createDataFrame(whole, schema=TRANSCRIPT_SCHEMA)
-    want = parse_transcripts(sdf).toPandas()
+    want = parse_stage(spark, sdf).toPandas()
 
     from tests.conftest import norm_cell
 

@@ -550,7 +550,8 @@ def test_resume_recomputes_a_stage_of_the_older_format(spark, tmp_path):
     synthetic 无有效日志行 rows), with the degenerate rule applied after
     it.  A resume over such a stage, committed under that format's
     fingerprint, must recompute it instead of losing the synthetic row."""
-    from sqllog_analysis_spark.functions.parse import parse_transcripts
+    from sqllog_analysis_spark.functions.parse import parse_batch
+    from sqllog_analysis_spark.schema import PARSED_SCHEMA
     from sqllog_analysis_spark.sinks.manifest import Manifest, fingerprint_input
 
     hdr = "2025-01-01 00:00:00.000 (EP[1] sess:NULL thrd:1 user:u trxid:1 stmt:NULL) [SEL]: x"
@@ -565,7 +566,9 @@ def test_resume_recomputes_a_stage_of_the_older_format(spark, tmp_path):
         {"slow_ms": 1000, "bucket": "hour", "target_partitions": None,
          "input_format": "transcripts"},
     )
-    stage = parse_transcripts(spark.read.parquet(inp))
+    stage = spark.createDataFrame(
+        parse_batch(spark.read.parquet(inp).toPandas()), schema=PARSED_SCHEMA
+    )
     assert stage.filter(F.col("raw") == oracle.NO_VALID_LINE).count() == 0
     stage.write.parquet(os.path.join(out, "staged_parsed"))
     Manifest(os.path.join(out, "_manifest")).commit(

@@ -6,11 +6,13 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
 
 from tests.conftest import norm_cell
 
 from sqllog_analysis_spark import oracle
 from sqllog_analysis_spark.functions.parse import parse_batch, parse_transcripts
+from sqllog_analysis_spark.plans.pipeline import parse_stage
 from sqllog_analysis_spark.schema import PARSED_SCHEMA, TRANSCRIPT_SCHEMA
 from sqllog_analysis_spark.sources.transcripts import generate_transcripts
 
@@ -57,6 +59,35 @@ def oracle_frame(df: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+_RECORD_COLS = [
+    "occurrence_time", "ep", "session", "thread", "user", "trx_id",
+    "statement", "appname", "ip", "sql_type", "description",
+    "execute_time", "rowcount", "execute_id",
+]
+
+
+def oracle_stage(df: pd.DataFrame) -> pd.DataFrame:
+    """oracle_frame with the conversation-level degenerate-input rule
+    (io.rs:147-167) applied, written out per conversation: a conversation
+    with a timestamp line keeps its records and errors, one without keeps
+    its errors if one is Utf8-class, else one synthetic row at its first
+    turn.  Sentinel rows go."""
+    keep = []
+    for _, g in oracle_frame(df).groupby("conv_id", sort=True):
+        if g.has_ts.any():
+            keep.append(g[g.error.notna() | g.occurrence_time.notna()])
+        elif (g.error_class == "Utf8").any():
+            keep.append(g[g.error.notna()])
+        else:
+            r = g.iloc[[0]].copy()
+            r[_RECORD_COLS] = None
+            r["error"] = f"未知错误: {oracle.NO_VALID_LINE}"
+            r["error_class"], r["error_line"] = "Other", 0
+            r["raw"] = oracle.NO_VALID_LINE
+            keep.append(r)
+    return pd.concat(keep, ignore_index=True)
+
+
 def assert_frames_equal(got: pd.DataFrame, want: pd.DataFrame) -> None:
     assert len(got) == len(want), (len(got), len(want))
     for c in COMPARE_COLS:
@@ -74,22 +105,27 @@ def test_parse_batch_matches_oracle(seed):
 
 
 def test_spark_parse_matches_oracle(spark):
-    """Full Spark round trip: Arrow in, mapInPandas, Arrow out — partition
+    """Full Spark round trip: Arrow in, exchange and sort, mapInPandas with
+    the conversation-level rule, Arrow out — partition and Arrow batch
     boundaries must not change results."""
     df = generate_transcripts(1500, 11)
     sdf = spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA).repartition(7)
+    old = _batch_rows(spark, 97)
+    try:
+        got = parse_stage(spark, sdf, target_partitions=5).toPandas()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     got = (
-        parse_transcripts(sdf)
-        .toPandas()
+        got
         .sort_values(["conv_id", "turn_idx", "rec_idx"])
         .reset_index(drop=True)
     )
-    assert_frames_equal(got[COMPARE_COLS], oracle_frame(df))
+    assert_frames_equal(got[COMPARE_COLS], oracle_stage(df))
 
 
 def test_empty_input(spark):
     sdf = spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA)
-    assert parse_transcripts(sdf).count() == 0
+    assert parse_stage(spark, sdf).count() == 0
 
 
 def test_parse_batch_keeps_sorted_input_order():
@@ -119,9 +155,9 @@ def test_parse_batch_keeps_sorted_input_order():
 
 
 def test_spark_parse_rejects_duplicate_turn_key_in_unsorted_input(spark):
-    """Follow mode parses micro-batches as they arrive — no exchange, no
-    sort.  A duplicated turn in SHUFFLED input must still fail loudly, not
-    emit the turn twice."""
+    """Every Spark parse goes through parse_stage, batch and follow mode
+    alike, and its sort puts a duplicated turn of SHUFFLED input next to
+    its copy: it must fail loudly, not emit the turn twice."""
     df = generate_transcripts(200, 5)
     dup = (
         pd.concat([df, df.iloc[[17]]], ignore_index=True)
@@ -130,7 +166,7 @@ def test_spark_parse_rejects_duplicate_turn_key_in_unsorted_input(spark):
     )
     sdf = spark.createDataFrame(dup, schema=TRANSCRIPT_SCHEMA).coalesce(1)
     with pytest.raises(Exception, match="duplicate turn key"):
-        parse_transcripts(sdf).collect()
+        parse_stage(spark, sdf, target_partitions=2).collect()
 
 
 def test_spark_parse_rejects_duplicate_turn_key_across_arrow_batches(spark):
@@ -138,8 +174,6 @@ def test_spark_parse_rejects_duplicate_turn_key_across_arrow_batches(spark):
     next to each other; when they straddle an Arrow batch boundary, each
     batch alone is unique, so the partition iterator must carry the last
     key of one batch into the next."""
-    from sqllog_analysis_spark.plans.pipeline import parse_stage
-
     df = generate_transcripts(40, 5).sort_values(["conv_id", "turn_idx"])
     df = df[df["conv_id"] == df["conv_id"].iloc[0]].head(4)
     # sorted: turn 0, 1, 2, 2', 3 → batches [0, 1, 2] | [2', 3]
@@ -218,8 +252,6 @@ def test_degenerate_rule_across_arrow_batches(spark):
     timestamp line is in the last batch, so its first batch is held, then
     released whole: the record embedded mid-line in c0 and the errors of
     c1 are kept."""
-    from sqllog_analysis_spark.plans.pipeline import parse_stage
-
     df = _turns([
         ("a", 0, _HDR),
         ("b", 0, "junk line"), ("b", 1, "   "), ("b", 2, "more junk"),
@@ -251,7 +283,7 @@ def test_degenerate_rule_across_arrow_batches(spark):
     assert not (got.error.isna() & got.occurrence_time.isna()).any()
 
 
-def test_parse_by_conversation_rejects_ungrouped_input(spark):
+def test_parse_rejects_ungrouped_input(spark):
     """The rule needs each conversation contiguous in its partition: a
     conv_id that decreases, within one Arrow batch or across two, raises
     instead of splitting a conversation into two verdicts."""
@@ -262,9 +294,23 @@ def test_parse_by_conversation_rejects_ungrouped_input(spark):
         for df in (within, across):
             sdf = spark.createDataFrame(df, schema=TRANSCRIPT_SCHEMA).coalesce(1)
             with pytest.raises(Exception, match="not grouped by conv_id"):
-                parse_transcripts(sdf, by_conversation=True).collect()
+                parse_transcripts(sdf).collect()
         # the same rows sorted parse cleanly
         ok = spark.createDataFrame(across.sort_values("conv_id"), schema=TRANSCRIPT_SCHEMA)
-        assert parse_transcripts(ok.coalesce(1), by_conversation=True).count() == 4
+        assert parse_transcripts(ok.coalesce(1)).count() == 4
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_parse_stage_rejects_a_null_conv_id(spark):
+    """A user's input read with schema inference may carry a null conv_id,
+    which the transcripts schema rules out: the conversation rule and
+    every sink key on it.  The parse names the contract instead of failing
+    later in the JVM on the non-null conv_id column."""
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA.fields]
+    )
+    df = _turns([(None, 0, _HDR), ("a", 0, "junk"), ("a", 1, _HDR)])
+    sdf = spark.createDataFrame(df, schema=schema)
+    with pytest.raises(Exception, match="null conv_id in transcripts input"):
+        parse_stage(spark, sdf, target_partitions=1).collect()
