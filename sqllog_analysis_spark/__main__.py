@@ -161,65 +161,26 @@ def main(argv: list[str] | None = None) -> int:
             )
             summary["in_memory"] = cfg.in_memory
             rec_root = os.path.join(out_dir, "records_stream")
-
-            def _batches(root: str) -> set[str]:
-                import glob as _g
-
-                return {
-                    os.path.basename(p)
-                    for p in _g.glob(os.path.join(root, "ingest_batch=*"))
-                }
-
-            dig_root = os.path.join(out_dir, "digest_stream")
-            # partials must cover every records batch — a session resumed
-            # from a checkpoint written before digest partials existed has
-            # records batches with no partial, and folding only the new
-            # ones would silently under-report; fall back to the full
-            # records scan there
-            covered = args.digest and os.path.isdir(dig_root) and _batches(
-                rec_root
-            ) <= _batches(dig_root)
-            if covered:
-                # fold the tiny per-batch digest partials — O(#batches ×
-                # #shapes), never a rescan of the records sink
-                from sqllog_analysis_spark.streaming.stream_pipeline import (
-                    read_stream_digest,
-                )
-
-                summary["workload_digest"] = [
-                    [r["shape"], r["n"], r["n_timed"], r["total_exec_ms"]]
-                    for r in read_stream_digest(
-                        spark, out_dir, top_k=args.digest
-                    ).collect()
-                ]
-            elif args.digest and os.path.isdir(rec_root):
+            if args.digest and os.path.isdir(rec_root):
                 from sqllog_analysis_spark.operators.loganalytics import (
-                    sql_shape_digest,
+                    latency_percentiles,
                 )
 
-                summary["workload_digest"] = [
-                    [r["shape"], r["n"], r["n_timed"], r["total_exec_ms"]]
-                    for r in sql_shape_digest(
-                        spark.read.parquet(rec_root), top_k=args.digest
-                    ).collect()
-                ]
-            hist_root = os.path.join(out_dir, "latency_hist_stream")
-            if (
-                args.digest
-                and os.path.isdir(hist_root)
-                and _batches(rec_root) <= _batches(hist_root)
-            ):
-                from sqllog_analysis_spark.streaming.stream_pipeline import (
-                    read_stream_latency,
-                )
-
+                digest, latency = [], []
+                # batches that routed no record leave no parquet file to
+                # take a schema from
+                if summary["records_routed"]:
+                    records = spark.read.parquet(rec_root)
+                    digest = _digest_rows(records, args.digest)
+                    latency = latency_percentiles(records).collect()
+                summary["workload_digest"] = digest
                 summary["latency_percentiles"] = {
                     r["category"]: {
                         "n": r["n"],
                         "q50_ub_ms": r["q50_ub_ms"],
                         "q99_ub_ms": r["q99_ub_ms"],
                     }
-                    for r in read_stream_latency(spark, out_dir).collect()
+                    for r in latency
                 }
             print(json.dumps(summary, ensure_ascii=False))
             return 0
@@ -265,20 +226,27 @@ def main(argv: list[str] | None = None) -> int:
 
             summary["compacted"] = compact_sink(spark, out_dir)
         if args.digest:
-            from sqllog_analysis_spark.operators.loganalytics import sql_shape_digest
             from sqllog_analysis_spark.sinks.writers import read_sink
 
-            summary["workload_digest"] = [
-                [r["shape"], r["n"], r["n_timed"], r["total_exec_ms"]]
-                for r in sql_shape_digest(
-                    read_sink(spark, out_dir), top_k=args.digest
-                ).collect()
-            ]
+            summary["workload_digest"] = _digest_rows(
+                read_sink(spark, out_dir), args.digest
+            )
         print(json.dumps(summary, ensure_ascii=False))
     finally:
         if tmp_ctx is not None:
             tmp_ctx.cleanup()
     return 0
+
+
+def _digest_rows(records, top_k: int) -> list[list]:
+    """The summary's ``workload_digest``: the top-``top_k`` statement shapes
+    of a records frame as ``[shape, n, n_timed, total_exec_ms]`` rows."""
+    from sqllog_analysis_spark.operators.loganalytics import sql_shape_digest
+
+    return [
+        [r["shape"], r["n"], r["n_timed"], r["total_exec_ms"]]
+        for r in sql_shape_digest(records, top_k=top_k).collect()
+    ]
 
 
 def _run_follow(

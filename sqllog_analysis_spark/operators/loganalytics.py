@@ -110,6 +110,56 @@ def sql_shape_digest(
     return out.limit(top_k) if top_k else out
 
 
+def latency_percentiles(
+    records: DataFrame, quantiles: tuple[float, ...] = (0.5, 0.99)
+) -> DataFrame:
+    """Per-category latency percentiles from log2 histograms of
+    ``execute_time``: for each requested quantile q, the TIGHT upper bound
+    of the first bin whose cumulative count reaches q·total — bin b holds
+    exactly t ∈ [2^b − 1, 2^(b+1) − 2] (floor(log2(t+1)) = b), so the
+    reported value is 2^(b+1) − 2 and the true percentile lies within
+    one bin width below it (factor-2 on log2 bins).
+
+    Returns (category, n, q50_ub_ms, q99_ub_ms, …) — one row per
+    category with a timed record; column per quantile, named
+    ``q<pct>_ub_ms`` (fractional percentiles keep their digits: 0.999 →
+    ``q99_9_ub_ms``).
+    """
+    hist = (
+        records.filter(F.col("execute_time").isNotNull())
+        .groupBy(
+            "category",
+            F.least(
+                F.floor(F.log2(F.col("execute_time") + 1)), F.lit(40)
+            ).cast("int").alias("bin"),
+        )
+        .agg(F.count("*").alias("n"))
+    )
+    w = Window.partitionBy("category").orderBy("bin")
+    tot = Window.partitionBy("category")
+    cum = hist.select(
+        "category",
+        "bin",
+        F.sum("n").over(w).alias("cum"),
+        F.sum("n").over(tot).alias("total"),
+    )
+    aggs = [F.max("total").alias("n")]
+    for q in quantiles:
+        ub = F.min(
+            F.when(
+                F.col("cum") >= q * F.col("total"),
+                # tight bin upper bound 2^(bin+1)-2; SQL shiftleft accepts
+                # a column bit count (the DataFrame fn wants a literal)
+                F.expr("shiftleft(CAST(1 AS BIGINT), bin + 1) - 2"),
+            )
+        )
+        # %g keeps fractional percentiles distinct (0.999 → q99_9, not a
+        # second q99) without trailing zeros
+        pct = ("%g" % (q * 100)).replace(".", "_")
+        aggs.append(ub.alias(f"q{pct}_ub_ms"))
+    return cum.groupBy("category").agg(*aggs).orderBy("category")
+
+
 # ---------------------------------------------------------------------------
 # Funnel analysis
 # ---------------------------------------------------------------------------

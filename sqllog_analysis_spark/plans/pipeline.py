@@ -46,7 +46,7 @@ from __future__ import annotations
 import os
 import time
 from collections import Counter
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 import pyarrow as pa
@@ -109,10 +109,6 @@ class PipelineConfig:
     # scaling probe): partitioning belongs to the data, not the executor
     # count.
     target_partitions: int | None = None
-    # bound on sink files per (category, dt) directory — also the salt width
-    # that spreads a hot sink partition over that many write tasks
-    files_per_partition: int = 4
-    conf: dict = field(default_factory=dict)
 
 
 def load_dim(spark: SparkSession) -> DataFrame:
@@ -265,7 +261,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             "target_partitions": cfg.target_partitions,
             "input_format": cfg.input_format,
             "staged_format": STAGED_FORMAT,
-            **cfg.conf,
         },
     )
     # no leading underscore: Spark's file index treats _-prefixed paths as
@@ -347,11 +342,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     def run_records() -> None:
         t0 = time.perf_counter()
-        write_category_sinks(
-            writable,
-            cfg.output_dir,
-            files_per_partition=cfg.files_per_partition,
-        )
+        write_category_sinks(writable, cfg.output_dir)
         lineage = parquet_lineage(os.path.join(cfg.output_dir, "records"))
         commit("records", lineage, sum(p["row_count"] for p in lineage), t0)
 

@@ -46,6 +46,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import SparkSession
 
 from sqllog_analysis_spark.sinks.lineage import _relpath, _resolve
+from sqllog_analysis_spark.sinks.writers import RECORDS_SORT
 
 _TMP = "_compact_"
 _OLD = "_old_"
@@ -213,7 +214,7 @@ def compact_sink(
         # in-partition sort is reapplied after the exchange
         (
             df.repartition(want)
-            .sortWithinPartitions("session", "thread", "trx_id")
+            .sortWithinPartitions(*RECORDS_SORT)
             .write.mode("overwrite")
             .parquet(scheme + tmp)
         )

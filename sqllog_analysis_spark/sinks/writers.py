@@ -40,6 +40,10 @@ from sqllog_analysis_spark.sinks.iceberg_probe import sink_format
 # ride neither the shuffle nor the sink files
 _ERROR_PATH_COLS = ("error", "error_class", "error_line", "raw")
 
+# in-file sort of every records-sink file — batch write, follow write and
+# compaction alike (see write_category_sinks)
+RECORDS_SORT = ("session", "thread", "trx_id")
+
 # rows below this threshold skip the salted exchange.  Default 0 = never
 # skip: interleaved best-of-3 A/B at 200k turns (round 4, after the
 # error-path column drop shrank the exchanged bytes) measured salted 5.88 s
@@ -100,7 +104,7 @@ def write_category_sinks(
     # partition columns lead the sort so the file writer's required
     # ordering (category, dt) is already satisfied and it does NOT
     # inject its own sort on top (which would discard ours)
-    out = out.sortWithinPartitions("category", "dt", "session", "thread", "trx_id")
+    out = out.sortWithinPartitions("category", "dt", *RECORDS_SORT)
     if fmt == "iceberg":
         (
             out.writeTo(iceberg_table or "sinks.records")

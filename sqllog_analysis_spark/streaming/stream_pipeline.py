@@ -7,13 +7,14 @@ routing graph inside ``foreachBatch`` on micro-batches that hold only
 complete conversations: raw-log mode gets that per file
 (:func:`stream_sqllog_pipeline`), transcripts mode from the
 :func:`closed_conversations` buffer (:func:`stream_transcript_pipeline`).
-Each micro-batch lands in exactly-once ``ingest_batch=<id>`` sinks, and
-the digest and latency partials fold at read time.
+Each micro-batch lands in exactly-once ``ingest_batch=<id>`` sinks.
+``--digest`` reads ``records_stream`` once at the end of the run, as batch
+mode reads its records sink; a trigger writes no summary of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
 
@@ -146,7 +147,7 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
 
         from sqllog_analysis_spark.operators.routing import split_sink_contract
         from sqllog_analysis_spark.plans.pipeline import downstream, parse_stage
-        from sqllog_analysis_spark.sinks.writers import records_frame
+        from sqllog_analysis_spark.sinks.writers import RECORDS_SORT, records_frame
 
         # parse_stage puts each conversation in one partition, contiguous
         # and in turn order, so the degenerate rule runs inside the parse
@@ -164,7 +165,7 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
         writable, contract_bad = split_sink_contract(g["routed"], category_total=True)
         writable = records_frame(writable)
         (
-            writable.sortWithinPartitions("category", "dt", "session", "thread", "trx_id")
+            writable.sortWithinPartitions("category", "dt", *RECORDS_SORT)
             .write.mode("overwrite")
             .partitionBy("category", "dt")
             .parquet(os.path.join(rec_root, f"ingest_batch={batch_id}"))
@@ -182,127 +183,9 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
             .json(os.path.join(err_root, f"ingest_batch={batch_id}"))
         )
         _write_batch_metrics(out_dir, batch_id, n_errors=int(obs.get["n"]))
-        _write_digest_partial(writable, out_dir, batch_id)
-        _write_latency_hist_partial(writable, out_dir, batch_id)
         parsed.unpersist()
 
     return write_batch
-
-
-def _write_digest_partial(routed: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Per-batch statement-shape digest PARTIAL — the algebraic half of a
-    streaming workload digest.  The digest is (count, count, sum) per
-    shape, so a batch's partial folds losslessly into the total; each
-    partial lands in its own exactly-once ``ingest_batch=<id>`` overwrite
-    (a retried batch REPLACES its partial, never double-counts), and
-    :func:`read_stream_digest` folds the tiny partials at read time —
-    O(#batches × #shapes) rows, never a rescan of the records."""
-    import os
-
-    from sqllog_analysis_spark.operators.loganalytics import sql_shape_digest
-
-    (
-        sql_shape_digest(routed)
-        .coalesce(1)  # a zero-record batch still writes a schema-bearing file
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "digest_stream", f"ingest_batch={batch_id}"))
-    )
-
-
-def _write_latency_hist_partial(routed: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Per-batch latency histogram PARTIAL: execute_time bucketed into
-    log2 bins per category.  Like the digest, a histogram is a bag of
-    counts — associative — so per-batch partials under exactly-once
-    ``ingest_batch=`` overwrites fold losslessly into the running
-    distribution, from which any percentile is answerable within one
-    bin's width (factor-2 on log2 bins) without retaining a single raw
-    latency.  This is the streaming analog of the reference's slow-query
-    analysis (EXECTIME thresholds, README.md:470-493) at unbounded
-    retention."""
-    import os
-
-    (
-        routed.filter(F.col("execute_time").isNotNull())
-        .groupBy(
-            "category",
-            F.least(
-                F.floor(F.log2(F.col("execute_time") + 1)), F.lit(40)
-            ).cast("int").alias("bin"),
-        )
-        .agg(F.count("*").alias("n"))
-        .coalesce(1)  # a zero-record batch still writes a schema-bearing file
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "latency_hist_stream", f"ingest_batch={batch_id}"))
-    )
-
-
-def read_stream_latency(
-    spark: SparkSession, out_dir: str, quantiles: tuple[float, ...] = (0.5, 0.99)
-) -> DataFrame:
-    """Per-category latency percentiles from the folded histogram
-    partials: for each requested quantile q, the TIGHT upper bound of
-    the first bin whose cumulative count reaches q·total — bin b holds
-    exactly t ∈ [2^b − 1, 2^(b+1) − 2] (floor(log2(t+1)) = b), so the
-    reported value is 2^(b+1) − 2 and the true percentile lies within
-    one bin width below it.
-
-    Returns (category, n, q50_ub_ms, q99_ub_ms, …) — one row per
-    category; column per quantile, named ``q<pct>_ub_ms`` (fractional
-    percentiles keep their digits: 0.999 → ``q99_9_ub_ms``).
-    """
-    import os
-
-    hist = (
-        spark.read.parquet(os.path.join(out_dir, "latency_hist_stream"))
-        .groupBy("category", "bin")
-        .agg(F.sum("n").alias("n"))
-    )
-    w = Window.partitionBy("category").orderBy("bin")
-    tot = Window.partitionBy("category")
-    cum = hist.select(
-        "category",
-        "bin",
-        F.sum("n").over(w).alias("cum"),
-        F.sum("n").over(tot).alias("total"),
-    )
-    aggs = [F.max("total").alias("n")]
-    for q in quantiles:
-        ub = F.min(
-            F.when(
-                F.col("cum") >= q * F.col("total"),
-                # tight bin upper bound 2^(bin+1)-2; SQL shiftleft accepts
-                # a column bit count (the DataFrame fn wants a literal)
-                F.expr("shiftleft(CAST(1 AS BIGINT), bin + 1) - 2"),
-            )
-        )
-        # %g keeps fractional percentiles distinct (0.999 → q99_9, not a
-        # second q99) without trailing zeros
-        pct = ("%g" % (q * 100)).replace(".", "_")
-        aggs.append(ub.alias(f"q{pct}_ub_ms"))
-    return cum.groupBy("category").agg(*aggs).orderBy("category")
-
-
-def read_stream_digest(
-    spark: SparkSession, out_dir: str, top_k: int | None = None
-) -> DataFrame:
-    """Current workload digest of a streaming session: fold the per-batch
-    partials written by :func:`_write_digest_partial`.  Identical output
-    to running ``sql_shape_digest`` over all routed records at once
-    (counts and sums are associative), pinned by
-    test_streaming.py::test_stream_digest_matches_batch_digest."""
-    import os
-
-    out = (
-        spark.read.parquet(os.path.join(out_dir, "digest_stream"))
-        .groupBy("shape")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("n_timed").alias("n_timed"),
-            F.sum("total_exec_ms").alias("total_exec_ms"),
-        )
-        .orderBy(F.desc("n"), "shape")
-    )
-    return out.limit(top_k) if top_k else out
 
 
 def closed_conversations(

@@ -204,6 +204,55 @@ def test_cli_follow_streams_raw_dir_and_resumes(spark, tmp_path, capsys):
     assert s2["parse_errors"] == s1["parse_errors"]
 
 
+def test_cli_follow_digest_matches_batch_digest(spark, tmp_path, capsys):
+    """--follow --digest over two triggers (one file each, the second
+    on a resumed run) prints the same workload_digest as batch-mode
+    --digest over the same directory, and per-category latency
+    percentiles as tight log2-bin upper bounds.  A session whose only
+    trigger routed no record reports an empty digest."""
+    import json
+
+    d = tmp_path / "logs"
+    d.mkdir()
+    (d / "dmsql_junk.log").write_text("no timestamps here\n", encoding="utf-8")
+    out = str(tmp_path / "follow_out")
+    follow = ["--input", str(d), "--input-format", "raw", "--output", out,
+              "--follow", "--digest", "10"]
+    assert main(follow) == 0
+    s = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert s["batches"] == 1 and s["records_routed"] == 0
+    assert s["workload_digest"] == [] and s["latency_percentiles"] == {}
+
+    (d / "dmsql_a.log").write_text(
+        "2025-09-21 12:00:00.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 stmt:NULL) [SEL]: select 7\n"
+        "EXECTIME: 100(ms) ROWCOUNT: 1 EXEC_ID: 1.\n",
+        encoding="utf-8",
+    )
+    assert main(follow) == 0
+    capsys.readouterr()
+    (d / "dmsql_b.log").write_text(
+        "2025-09-21 12:00:02.000 (EP[1] sess:NULL thrd:2 user:usr trxid:2 stmt:NULL) [SEL]: select 9\n"
+        "EXECTIME: 40(ms) ROWCOUNT: 1 EXEC_ID: 2.\n"
+        "2025-09-21 12:00:03.000 (EP[1] sess:NULL thrd:2 user:usr trxid:3 stmt:NULL) [DEL]: delete from x where id = 5\n",
+        encoding="utf-8",
+    )
+    assert main(follow) == 0
+    s = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert s["batches"] == 3 and s["records_routed"] == 3
+
+    rc = main(["--input", str(d), "--input-format", "raw",
+               "--output", str(tmp_path / "batch_out"), "--digest", "10"])
+    assert rc == 0
+    b = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert s["workload_digest"] == b["workload_digest"]
+    assert len(s["workload_digest"]) == 2  # the two selects share a shape
+    # chat holds the two timed records: 40 ms → bin floor(log2 41) = 5,
+    # tight ub 2^6-2 = 62; 100 ms → bin 6, ub 126.  The delete is untimed.
+    assert s["latency_percentiles"] == {
+        "chat": {"n": 2, "q50_ub_ms": 62, "q99_ub_ms": 126}
+    }
+
+
 def test_dedup_cli_minhash_end_to_end(spark, tmp_path, capsys):
     """dedup_cli: pairs → clusters → deduped corpus, one JSON summary."""
     import json

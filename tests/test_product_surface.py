@@ -22,11 +22,22 @@ PKG = "sqllog_analysis_spark"
 
 
 def _python_files() -> list[Path]:
-    """Tracked .py files that exist in the working tree."""
-    out = subprocess.run(
-        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True,
-        text=True, check=True,
-    ).stdout.split()
+    """Tracked .py files that exist in the working tree; outside a git
+    checkout of this tree (an exported source tree, also one unpacked
+    inside another repository), every .py file not under a
+    dot-directory."""
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True,
+            text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        out = []
+    if not out:
+        return sorted(
+            p for p in ROOT.rglob("*.py")
+            if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)
+        )
     return [ROOT / f for f in out if (ROOT / f).is_file()]
 
 

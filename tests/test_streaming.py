@@ -75,16 +75,17 @@ def test_stream_sqllog_pipeline_full_batch_parity(spark, tmp_path):
 
 @pytest.mark.slow
 def test_stream_digest_matches_batch_digest(spark, tmp_path):
-    """The streaming workload digest (per-batch algebraic partials under
-    digest_stream/ingest_batch=*, folded at read) equals sql_shape_digest
-    over all routed records at once — across MULTIPLE micro-batches."""
-    from sqllog_analysis_spark.operators.loganalytics import sql_shape_digest
+    """The streaming workload digest (sql_shape_digest over records_stream,
+    the sink every micro-batch appends an ingest_batch=* directory to)
+    equals sql_shape_digest over the batch graph's routed records —
+    across MULTIPLE micro-batches."""
+    from sqllog_analysis_spark.operators.loganalytics import (
+        latency_percentiles,
+        sql_shape_digest,
+    )
     from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
     from sqllog_analysis_spark.plans.pipeline import build
-    from sqllog_analysis_spark.streaming.stream_pipeline import (
-        read_stream_digest,
-        stream_sqllog_pipeline,
-    )
+    from sqllog_analysis_spark.streaming.stream_pipeline import stream_sqllog_pipeline
 
     a = (
         "2025-09-21 12:00:00.000 (EP[1] sess:NULL thrd:1 user:usr trxid:1 stmt:NULL) [SEL]: select 7\n"
@@ -105,8 +106,9 @@ def test_stream_digest_matches_batch_digest(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
+    records = spark.read.parquet(out + "/records_stream")
     got = sorted(
-        map(tuple, read_stream_digest(spark, out).collect())
+        map(tuple, sql_shape_digest(records).collect())
     )
     g = build(spark, read_sqllog_dir(spark, str(d)))
     want = sorted(map(tuple, sql_shape_digest(g["routed"]).collect()))
@@ -115,12 +117,10 @@ def test_stream_digest_matches_batch_digest(spark, tmp_path):
     sel = [r for r in got if r[0] == "select ? exectime: ?(ms) rowcount: ? exec_id: ?."]
     assert sel and sel[0][1] == 2 and sel[0][3] == 140
 
-    # latency-histogram partials folded across batches: per-category
-    # percentile upper bound brackets the exact percentile within its
-    # log2 bin — here all timed records are 'chat' (40ms, 100ms)
-    from sqllog_analysis_spark.streaming.stream_pipeline import read_stream_latency
-
-    lat = {r["category"]: r for r in read_stream_latency(spark, out).collect()}
+    # latency histograms across batches: per-category percentile upper
+    # bound brackets the exact percentile within its log2 bin — here all
+    # timed records are 'chat' (40ms, 100ms)
+    lat = {r["category"]: r for r in latency_percentiles(records).collect()}
     chat = lat["chat"]
     assert chat["n"] == 2
     # p50 = 40ms → bin floor(log2 41) = 5 holds [31, 62] → tight ub 62
@@ -131,25 +131,28 @@ def test_stream_digest_matches_batch_digest(spark, tmp_path):
         assert r["q99_ub_ms"] >= r["q50_ub_ms"]
 
 
-def test_read_stream_latency_math_and_fractional_names(spark, tmp_path):
-    """Percentile selection over a hand-built histogram: the reported
-    value is the TIGHT upper bound 2^(b+1)-2 of the first bin whose
-    cumulative count reaches q·total, and fractional quantiles get
-    distinct column names (0.999 → q99_9_ub_ms, not a second q99)."""
+def test_latency_percentiles_math_and_fractional_names(spark):
+    """Percentile selection over log2 bins: the reported value is the
+    TIGHT upper bound 2^(b+1)-2 of the first bin whose cumulative count
+    reaches q·total, and fractional quantiles get distinct column names
+    (0.999 → q99_9_ub_ms, not a second q99)."""
     import pandas as pd
 
-    from sqllog_analysis_spark.streaming.stream_pipeline import read_stream_latency
+    from sqllog_analysis_spark.operators.loganalytics import latency_percentiles
 
-    out = str(tmp_path / "o")
-    # 100 records: 90 in bin 3 ([7,14]ms), 9 in bin 6 ([63,126]), 1 in bin 10
-    hist = pd.DataFrame(
-        {"category": ["chat"] * 3, "bin": [3, 6, 10], "n": [90, 9, 1]}
+    # 100 records: 90 in bin 3 ([7,14]ms), 9 in bin 6 ([63,126]), 1 in
+    # bin 10 ([1023,2046]); untimed records count in no bin
+    records = pd.DataFrame(
+        {
+            "category": ["chat"] * 102,
+            "execute_time": pd.Series(
+                [10] * 90 + [100] * 9 + [1500] + [None] * 2, dtype="Int64"
+            ),
+        }
     )
-    spark.createDataFrame(hist).write.parquet(
-        out + "/latency_hist_stream/ingest_batch=0"
-    )
-    row = read_stream_latency(
-        spark, out, quantiles=(0.5, 0.99, 0.999)
+    row = latency_percentiles(
+        spark.createDataFrame(records, "category string, execute_time bigint"),
+        quantiles=(0.5, 0.99, 0.999),
     ).collect()[0]
     assert row["n"] == 100
     assert row["q50_ub_ms"] == 2**4 - 2      # bin 3 covers p50
