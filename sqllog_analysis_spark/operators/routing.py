@@ -68,8 +68,9 @@ SINK_CONTRACT_ERROR = "写入约束错误"  # sink-contract violation (insert-fa
 
 def sink_contract(routed: DataFrame, category_total: bool = False) -> "F.Column":
     """The records sink's write contract as one boolean column: a known
-    category, a partitionable timestamp, and a conversation key (the sink
-    layout and sort order depend on exactly these).
+    category and a partitionable timestamp (the sink layout depends on
+    exactly these).  A null conversation key never reaches this point:
+    the parse rejects it (functions/parse.py).
 
     ``category_total=True`` (r6 optimization) asserts the caller's
     ``category`` column is a CLOSED when-chain over ``CATEGORIES`` (true
@@ -80,11 +81,11 @@ def sink_contract(routed: DataFrame, category_total: bool = False) -> "F.Column"
     regexp-derived ``category`` expression, so pushing the violation
     filter toward the scan would otherwise re-evaluate the whole
     enrich/route expression chain for EVERY row of a second full pass;
-    the remaining (ts, conv_id) null checks push down to the parquet scan
-    as cheap native predicates instead."""
+    the remaining ts null check pushes down to the parquet scan as a cheap
+    native predicate instead."""
     from sqllog_analysis_spark.schema import CATEGORIES
 
-    ok = F.col("ts").isNotNull() & F.col("conv_id").isNotNull()
+    ok = F.col("ts").isNotNull()
     if not category_total:
         ok = F.col("category").isin(list(CATEGORIES)) & ok
     return F.coalesce(ok, F.lit(False))
@@ -98,7 +99,7 @@ def split_sink_contract(
     ok = sink_contract(routed, category_total=category_total)
     good = routed.filter(ok)
     bad = routed.filter(~ok).select(
-        F.coalesce(F.col("conv_id"), F.lit("<unknown>")).alias("path"),
+        F.col("conv_id").alias("path"),
         F.coalesce(F.col("turn_idx").cast("long"), F.lit(0).cast("long")).alias(
             "line"
         ),

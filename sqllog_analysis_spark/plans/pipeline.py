@@ -75,8 +75,8 @@ from sqllog_analysis_spark.session import scan_partitions
 from sqllog_analysis_spark.sinks.manifest import Manifest, fingerprint_input
 from sqllog_analysis_spark.sinks.writers import (
     records_frame,
-    write_category_sinks,
-    write_error_sink,
+    write_errors,
+    write_records,
 )
 from sqllog_analysis_spark.sources.transcripts import role_tool_dim_rows
 
@@ -311,9 +311,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     if parse_committed:
         skipped.append("parsed")
-        n_turns = (manifest.read("parsed") or {}).get("input_turns")
-        if n_turns is None:  # manifest from an older run: fall back to footers
-            n_turns = sum(p["row_count"] for p in parquet_lineage(cfg.input_path))
+        n_turns = manifest.read("parsed")["input_turns"]
     else:
         # lineage from the written files' parquet footers — metadata-only,
         # no recompute (sinks/lineage.py)
@@ -331,52 +329,40 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     # contract are skipped-and-logged like the reference's failed insert
     # batches (duckdb_impl.rs:475-488) instead of failing the stage.
     # category_total: route_records' category is a closed when-chain, so
-    # the violation predicate reduces to (ts, conv_id) null checks that
-    # push down to the staged scan — the error chain no longer re-runs
+    # the violation predicate reduces to a ts null check that pushes
+    # down to the staged scan — the error chain no longer re-runs
     # the enrich/route regex chain over the full staged data (r6).
     writable, contract_bad = split_sink_contract(g["routed"], category_total=True)
-    err_obs = Observation()
-    errors_obs = g["errors"].unionByName(contract_bad).observe(
-        err_obs, F.count(F.lit(1)).alias("n")
-    )
+    rec_dir = os.path.join(cfg.output_dir, "records")
+    err_dir = os.path.join(cfg.output_dir, "parse_errors")
 
     def run_records() -> None:
         t0 = time.perf_counter()
-        write_category_sinks(writable, cfg.output_dir)
-        lineage = parquet_lineage(os.path.join(cfg.output_dir, "records"))
+        write_records(writable, rec_dir)
+        lineage = parquet_lineage(rec_dir)
         commit("records", lineage, sum(p["row_count"] for p in lineage), t0)
 
     def run_errors() -> None:
         t0 = time.perf_counter()
-        write_error_sink(errors_obs, cfg.output_dir)
-        # JSONL has no footers: row count comes from the write job's
-        # observe() counter (zero extra jobs), lineage records file sizes
-        lineage = jsonl_lineage(os.path.join(cfg.output_dir, "parse_errors"))
-        commit("parse_errors", lineage, int(err_obs.get["n"]), t0)
+        # JSONL has no footers: the row count comes from the write job's
+        # observe() counter, lineage records file sizes
+        n = write_errors(g["errors"].unionByName(contract_bad), err_dir)
+        commit("parse_errors", jsonl_lineage(err_dir), n, t0)
 
     def run_aggregates() -> None:
         t0 = time.perf_counter()
-        rec_dir = os.path.join(cfg.output_dir, "records")
-        rec_files = parquet_lineage(rec_dir)
-        if rec_files:
-            # conv_buckets aggregates over the WRITTEN records sink, not a
-            # recompute: the enrich/route chain runs exactly once (inside
-            # the records write), and this groupBy is a column-pruned scan
-            # of the columnar sink, read with its known schema (no
-            # footer-inference job).  sink_counts is the files' footer
-            # row counts summed per category= directory: facts the driver
-            # already holds, no job
-            routed_src = spark.read.schema(records_frame(writable).schema).parquet(rec_dir)
-            n = Counter()
-            for f in rec_files:
-                part = dict(d.split("=", 1) for d in f["file"].split("/")[:-1] if "=" in d)
-                n[part["category"]] += f["row_count"]
-        else:
-            # no records files (zero records, or an Iceberg sink): the
-            # post-contract-split branch, NOT g["routed"] — rows excluded
-            # by sink-write isolation must not reappear in the aggregates
-            routed_src = writable
-            n = {r["category"]: r["n"] for r in agg_sink_counts(writable).collect()}
+        # conv_buckets aggregates over the WRITTEN records sink, not a
+        # recompute: the enrich/route chain runs exactly once (inside the
+        # records write), and this groupBy is a column-pruned scan of the
+        # columnar sink, read with its known schema (no footer-inference
+        # job; a records sink with no files reads as zero rows).
+        # sink_counts is the files' footer row counts summed per
+        # category= directory: facts the driver already holds, no job
+        routed_src = spark.read.schema(records_frame(writable).schema).parquet(rec_dir)
+        n = Counter()
+        for f in parquet_lineage(rec_dir):
+            part = dict(d.split("=", 1) for d in f["file"].split("/")[:-1] if "=" in d)
+            n[part["category"]] += f["row_count"]
         agg_conv_buckets(routed_src, bucket=cfg.bucket).write.mode(
             "overwrite"
         ).parquet(os.path.join(cfg.output_dir, "conv_buckets"))

@@ -1,15 +1,21 @@
 """Fan-out sink writes (SURVEY.md §2.4 K1-K9, Spark-native).
 
-- Category sinks: ONE write partitioned by (category, dt) — the physical
+- One records writer and one errors writer, shared by batch mode
+  (``<out>/records``, ``<out>/parse_errors``) and follow mode
+  (``records_stream/ingest_batch=<id>``, ``errors_stream/ingest_batch=<id>``),
+  as the reference sends every parsed record through one loader and every
+  failure through one JSONL writer (duckdb_impl.rs:139-251,
+  error_writer.rs:147-152).
+- Records: ONE parquet write partitioned by (category, dt) — the physical
   fan-out happens inside the write, so the routed DataFrame is scanned
   once, not once per category (the reference's per-file temp-DB + merge
   dance, duckdb_impl.rs:349-596, collapses into task-isolated partition
-  files + an atomic directory commit).
-- Sink format is DECIDED BY THE RUNTIME PROBE (sinks/iceberg_probe.py):
-  Iceberg when the catalog + jar are present (snapshot-atomic commits,
-  sort-order metadata), parquet otherwise.  SURVEY §7.1.
-- parse_errors: JSONL with the reference's {path, line, error, raw} shape
-  (error_writer.rs:147-152).
+  files + an atomic directory commit).  Every reader of the sink — resume
+  lineage, ``--export``, ``--digest``, compaction and retention — reads
+  this parquet layout.
+- Errors: JSONL with the reference's {path, line, error, raw} shape
+  (error_writer.rs:147-152), its row count taken by an ``observe()`` on
+  the write job (JSONL has no footers).
 - Exports: CSV / JSON of any sink table (duckdb_impl.rs:292-317), format
   string dispatched like ExportFormat (database/types.rs:21-61).
 
@@ -22,17 +28,17 @@ downstream scan.  The writer therefore re-shuffles on
 (category, dt, salt(conv_id)) first: each partition directory is written
 by a BOUNDED number of tasks (≤ files_per_partition), and a hot
 (chat, busy-day) combo still spreads over that many tasks instead of
-funnelling through one (operators/skew.py).
+funnelling through one (operators/skew.py).  Follow mode gets the same
+bound per ``ingest_batch=`` directory.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from sqllog_analysis_spark.operators.skew import salted_repartition
-from sqllog_analysis_spark.sinks.iceberg_probe import sink_format
 
 
 # every routed record carries these error-path columns as all-NULL (the
@@ -41,16 +47,8 @@ from sqllog_analysis_spark.sinks.iceberg_probe import sink_format
 _ERROR_PATH_COLS = ("error", "error_class", "error_line", "raw")
 
 # in-file sort of every records-sink file — batch write, follow write and
-# compaction alike (see write_category_sinks)
+# compaction alike (see write_records)
 RECORDS_SORT = ("session", "thread", "trx_id")
-
-# rows below this threshold skip the salted exchange.  Default 0 = never
-# skip: interleaved best-of-3 A/B at 200k turns (round 4, after the
-# error-path column drop shrank the exchanged bytes) measured salted 5.88 s
-# vs skipped 6.14 s — the second shuffle costs NOTHING measurable even at
-# toy scale, so the scale-safe bounded-files layout is unconditional.  The
-# knob remains for latency-sensitive tiny-input runs that prefer one job.
-SALT_MIN_ROWS = 0
 
 
 def records_frame(routed: DataFrame) -> DataFrame:
@@ -59,72 +57,59 @@ def records_frame(routed: DataFrame) -> DataFrame:
     return routed.drop(*_ERROR_PATH_COLS).withColumn("dt", F.to_date("ts"))
 
 
-def write_category_sinks(
-    routed: DataFrame,
-    out_dir: str,
-    fmt: str | None = None,
-    files_per_partition: int = 4,
-    iceberg_table: str | None = None,
-    row_count_hint: int | None = None,
-    salt_min_rows: int = SALT_MIN_ROWS,
-) -> None:
-    """One pass, partitioned fan-out: <out_dir>/records/category=<c>/dt=<d>/.
+def write_records(routed: DataFrame, path: str, files_per_partition: int = 4) -> None:
+    """One pass, partitioned fan-out: <path>/category=<c>/dt=<d>/.
 
     Rows are sorted WITHIN each task partition by (session, thread, trx_id)
     before the write — the Spark analog of the reference's deferred indexes
     on exactly those columns (duckdb_impl.rs:124-136, 663-667): parquet
     row-group min/max stats on a sorted column give data skipping for
     point/range lookups.
-
-    ``fmt=None`` asks the runtime probe; 'iceberg' writes via the V2
-    ``writeTo`` API into ``iceberg_table`` (snapshot-atomic replace),
-    'parquet' writes the directory layout above.
-
-    ``row_count_hint`` (e.g. the pipeline's observed input count) makes the
-    bounded-files exchange ADAPTIVE: below ``salt_min_rows`` the salted
-    repartition is skipped — a small input cannot amortize a second
-    full-data shuffle, and its worst-case file count (tasks × combos) is
-    small anyway.  With no hint the exchange always runs (the safe default
-    for the 100 TB case).
     """
-    if fmt is None:
-        fmt = sink_format(routed.sparkSession)
-    out = records_frame(routed)
-    if row_count_hint is None or row_count_hint >= salt_min_rows:
-        # bounded-files / bounded-task-size exchange (see module docstring).
-        # Salt on a row-unique tuple: a mega-CONVERSATION spreads over the
-        # bucket width too (the write needs no per-conversation locality),
-        # while retries stay deterministic (content-derived, not rand()).
-        out = salted_repartition(
-            out,
-            ["category", "dt"],
-            salt_buckets=files_per_partition,
-            salt_on=("conv_id", "turn_idx", "rec_idx"),
-        )
+    # bounded-files / bounded-task-size exchange (see module docstring).
+    # Salt on a row-unique tuple: a mega-CONVERSATION spreads over the
+    # bucket width too (the write needs no per-conversation locality),
+    # while retries stay deterministic (content-derived, not rand()).
+    out = salted_repartition(
+        records_frame(routed),
+        ["category", "dt"],
+        salt_buckets=files_per_partition,
+        salt_on=("conv_id", "turn_idx", "rec_idx"),
+    )
     # partition columns lead the sort so the file writer's required
     # ordering (category, dt) is already satisfied and it does NOT
     # inject its own sort on top (which would discard ours)
-    out = out.sortWithinPartitions("category", "dt", *RECORDS_SORT)
-    if fmt == "iceberg":
-        (
-            out.writeTo(iceberg_table or "sinks.records")
-            .using("iceberg")
-            .partitionedBy(F.col("category"), F.col("dt"))
-            .createOrReplace()
-        )
-    elif fmt == "parquet":
-        (
-            out.write.mode("overwrite")
-            .partitionBy("category", "dt")
-            .parquet(os.path.join(out_dir, "records"))
-        )
-    else:
-        raise ValueError(f"unsupported sink format: {fmt}")
+    (
+        out.sortWithinPartitions("category", "dt", *RECORDS_SORT)
+        .write.mode("overwrite")
+        .partitionBy("category", "dt")
+        .parquet(path)
+    )
+
+
+def write_errors(errors: DataFrame, path: str) -> int:
+    """JSONL error sink (K6) at ``path``; returns the rows written, counted
+    by an ``observe()`` on the write job itself (zero extra jobs)."""
+    obs = Observation()
+    errors.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").json(path)
+    return int(obs.get["n"])
+
+
+def write_category_sinks(
+    routed: DataFrame,
+    out_dir: str,
+    files_per_partition: int = 4,
+    row_count_hint: int | None = None,
+) -> None:
+    """:func:`write_records` into the batch layout, ``<out_dir>/records``.
+    ``row_count_hint`` is unused: the benchmark's per-layer probe
+    (perfbench/layers.py) still passes it."""
+    write_records(routed, os.path.join(out_dir, "records"), files_per_partition)
 
 
 def write_error_sink(errors: DataFrame, out_dir: str) -> None:
-    """JSONL parse_errors sink (K6)."""
-    errors.write.mode("overwrite").json(os.path.join(out_dir, "parse_errors"))
+    """:func:`write_errors` into the batch layout, ``<out_dir>/parse_errors``."""
+    write_errors(errors, os.path.join(out_dir, "parse_errors"))
 
 
 def write_aggregates(

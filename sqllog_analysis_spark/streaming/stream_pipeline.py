@@ -7,14 +7,17 @@ routing graph inside ``foreachBatch`` on micro-batches that hold only
 complete conversations: raw-log mode gets that per file
 (:func:`stream_sqllog_pipeline`), transcripts mode from the
 :func:`closed_conversations` buffer (:func:`stream_transcript_pipeline`).
-Each micro-batch lands in exactly-once ``ingest_batch=<id>`` sinks.
+Each micro-batch lands in exactly-once ``ingest_batch=<id>`` sinks,
+written by batch mode's own records and errors writers
+(``sinks/writers.py``), so each ``category=/dt=`` directory of a trigger
+holds at most ``files_per_partition`` files, as in the batch sink.
 ``--digest`` reads ``records_stream`` once at the end of the run, as batch
 mode reads its records sink; a trigger writes no summary of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from sqllog_analysis_spark.schema import TRANSCRIPT_SCHEMA
 
@@ -143,11 +146,9 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
     err_root = os.path.join(out_dir, "errors_stream")
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         from sqllog_analysis_spark.operators.routing import split_sink_contract
         from sqllog_analysis_spark.plans.pipeline import downstream, parse_stage
-        from sqllog_analysis_spark.sinks.writers import RECORDS_SORT, records_frame
+        from sqllog_analysis_spark.sinks.writers import write_errors, write_records
 
         # parse_stage puts each conversation in one partition, contiguous
         # and in turn order, so the degenerate rule runs inside the parse
@@ -161,28 +162,16 @@ def _full_graph_batch_writer(out_dir: str, slow_ms: int):
         ).persist()
         g = downstream(bdf.sparkSession, parsed, slow_ms=slow_ms)
         # category_total: route_records' when-chain is closed over
-        # CATEGORIES, so the violation predicate is just the null checks
+        # CATEGORIES, so the violation predicate is just the ts null check
         writable, contract_bad = split_sink_contract(g["routed"], category_total=True)
-        writable = records_frame(writable)
-        (
-            writable.sortWithinPartitions("category", "dt", *RECORDS_SORT)
-            .write.mode("overwrite")
-            .partitionBy("category", "dt")
-            .parquet(os.path.join(rec_root, f"ingest_batch={batch_id}"))
+        write_records(writable, os.path.join(rec_root, f"ingest_batch={batch_id}"))
+        # the error-row count the writer observed on its write job goes to
+        # a per-batch sidecar, since JSONL has no footers to read it from
+        n_errors = write_errors(
+            g["errors"].unionByName(contract_bad),
+            os.path.join(err_root, f"ingest_batch={batch_id}"),
         )
-        # error-row count rides an observe() on the write job itself —
-        # the follow-mode summary sums these per-batch sidecars instead of
-        # re-reading error file CONTENTS on the driver (JSONL has no
-        # footers, so the count must be captured at write time)
-        obs = Observation()
-        (
-            g["errors"]
-            .unionByName(contract_bad)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .json(os.path.join(err_root, f"ingest_batch={batch_id}"))
-        )
-        _write_batch_metrics(out_dir, batch_id, n_errors=int(obs.get["n"]))
+        _write_batch_metrics(out_dir, batch_id, n_errors=n_errors)
         parsed.unpersist()
 
     return write_batch

@@ -194,16 +194,16 @@ def test_chunked_reader_segment_spans_chunk_boundary(tmp_path):
 
 def test_error_sink_jsonl_shape(spark, tmp_path):
     """error_writer.rs:147-152 JSONL field parity through the real sink."""
-    from sqllog_analysis_spark.sinks.writers import write_error_sink
+    from sqllog_analysis_spark.sinks.writers import write_errors
 
     d = make_dir(tmp_path)
     g = build(spark, read_sqllog_dir(spark, d))
-    out = str(tmp_path / "sink")
-    write_error_sink(g["errors"], out)
+    err_dir = str(tmp_path / "parse_errors")
+    n = write_errors(g["errors"], err_dir)
     lines = []
-    err_dir = os.path.join(out, "parse_errors")
     for fn in os.listdir(err_dir):
         if fn.endswith(".json"):
             with open(os.path.join(err_dir, fn)) as f:
                 lines += [json.loads(line) for line in f if line.strip()]
     assert lines and all(set(o) <= {"path", "line", "error", "raw"} for o in lines)
+    assert n == len(lines)  # the observed count is the rows written

@@ -198,13 +198,13 @@ def test_sink_sort_order_gives_rowgroup_stats(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from sqllog_analysis_spark.sinks.writers import write_category_sinks
+    from sqllog_analysis_spark.sinks.writers import write_records
 
     inp = str(tmp_path / "t.parquet")
     out = str(tmp_path / "sorted_out")
     write_transcripts(inp, 1200, seed=9)
     g = build(spark, spark.read.parquet(inp))
-    write_category_sinks(g["routed"], out)
+    write_records(g["routed"], os.path.join(out, "records"))
 
     files = glob.glob(os.path.join(out, "records", "category=*", "dt=*", "*.parquet"))
     assert files
@@ -269,84 +269,6 @@ def test_run_pipeline_and_resume(spark, tmp_path):
     assert s4["stages_ran"] == stages
 
 
-def test_iceberg_probe_falls_back_to_parquet(spark):
-    """SURVEY §7.1: Iceberg is probed at runtime, not assumed; this sandbox
-    has no Iceberg jar so the parquet path must be selected (and the whole
-    suite proves that path works)."""
-    from sqllog_analysis_spark.sinks.iceberg_probe import iceberg_available, sink_format
-
-    assert iceberg_available(spark) is False
-    assert sink_format(spark) == "parquet"
-
-
-def test_writer_format_driven_by_probe(spark, tmp_path, monkeypatch):
-    """write_category_sinks consults the runtime probe when no format is
-    forced (round-2 finding: the probe existed but nothing called it)."""
-    from sqllog_analysis_spark.sinks import writers
-
-    calls = []
-
-    def fake_probe(s):
-        calls.append(s)
-        return "parquet"
-
-    monkeypatch.setattr(writers, "sink_format", fake_probe)
-    inp = str(tmp_path / "t.parquet")
-    write_transcripts(inp, 300, seed=11)
-    g = build(spark, spark.read.parquet(inp))
-    writers.write_category_sinks(g["routed"], str(tmp_path / "probe_out"))
-    assert len(calls) == 1  # probe decided the format
-
-    with pytest.raises(ValueError, match="unsupported sink format"):
-        writers.write_category_sinks(
-            g["routed"], str(tmp_path / "bad_out"), fmt="orc"
-        )
-
-
-def test_iceberg_branch_exercised_via_mocked_v2_writer(spark, tmp_path, monkeypatch):
-    """No Iceberg jar ships in this sandbox, so the fmt='iceberg' branch is
-    pinned by intercepting the DataFrameWriterV2 chain at the DataFrame
-    boundary: write_category_sinks must route through writeTo(table)
-    .using('iceberg').partitionedBy(category, dt).createOrReplace()."""
-    from sqllog_analysis_spark.sinks import writers
-
-    calls: dict = {"chain": []}
-
-    class FakeV2Writer:
-        def using(self, fmt):
-            calls["chain"].append(("using", fmt))
-            return self
-
-        def partitionedBy(self, *cols):
-            calls["chain"].append(("partitionedBy", len(cols)))
-            return self
-
-        def createOrReplace(self):
-            calls["chain"].append(("createOrReplace",))
-
-    def fake_write_to(self, table):
-        calls["table"] = table
-        calls["columns"] = self.columns
-        return FakeV2Writer()
-
-    routed = spark.createDataFrame(
-        [("c1", 0, 0, "chat", dt.datetime(2025, 9, 16, 1), "s", "1", "t")],
-        "conv_id string, turn_idx int, rec_idx int, category string, "
-        "ts timestamp, session string, thread string, trx_id string",
-    )
-    # patch the CONCRETE DataFrame class (pyspark 4's classic subclass
-    # overrides the pyspark.sql.DataFrame base methods)
-    monkeypatch.setattr(type(routed), "writeTo", fake_write_to)
-    writers.write_category_sinks(
-        routed, str(tmp_path / "ice_out"), fmt="iceberg", iceberg_table="db.records"
-    )
-    assert calls["table"] == "db.records"
-    assert ("using", "iceberg") in calls["chain"]
-    assert ("partitionedBy", 2) in calls["chain"]
-    assert calls["chain"][-1] == ("createOrReplace",)
-    assert "dt" in calls["columns"]  # partition column derived before write
-
-
 def test_salted_sink_write_bounded_files(spark, tmp_path):
     """The sink exchange bounds files per (category, dt) directory to
     files_per_partition, and salting changes no rows (operators/skew.py
@@ -354,14 +276,14 @@ def test_salted_sink_write_bounded_files(spark, tmp_path):
     import glob
     from collections import Counter
 
-    from sqllog_analysis_spark.sinks.writers import write_category_sinks
+    from sqllog_analysis_spark.sinks.writers import write_records
 
     inp = str(tmp_path / "t.parquet")
     write_transcripts(inp, 2000, seed=13)
     g = build(spark, spark.read.parquet(inp))
     fpp = 2
     out = str(tmp_path / "salted_out")
-    write_category_sinks(g["routed"], out, files_per_partition=fpp)
+    write_records(g["routed"], os.path.join(out, "records"), files_per_partition=fpp)
 
     files = glob.glob(os.path.join(out, "records", "category=*", "dt=*", "*.parquet"))
     assert files
@@ -389,7 +311,7 @@ def test_salted_sink_spreads_mega_conversation(spark, tmp_path):
     import glob
     from collections import Counter
 
-    from sqllog_analysis_spark.sinks.writers import write_category_sinks
+    from sqllog_analysis_spark.sinks.writers import write_records
 
     hot = [
         ("hot", i, 0, "chat", dt.datetime(2025, 9, 16, i % 24), "s1", "1", "t1")
@@ -411,7 +333,7 @@ def test_salted_sink_spreads_mega_conversation(spark, tmp_path):
     # observe the partitioning a at-scale write would get
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        write_category_sinks(routed, out, files_per_partition=fpp)
+        write_records(routed, os.path.join(out, "records"), files_per_partition=fpp)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     files = glob.glob(os.path.join(out, "records", "category=*", "dt=*", "*.parquet"))
@@ -437,14 +359,15 @@ def test_dup_clusters_raises_on_non_convergence(spark):
 
 def test_sink_contract_split_isolates_poison_rows(spark):
     """R2 (duckdb_impl.rs:475-488 analog): rows violating the sink write
-    contract are skipped-and-logged, not stage-fatal."""
+    contract are skipped-and-logged, not stage-fatal.  A null conv_id is
+    rejected earlier, by the parse
+    (test_spark_parser.py::test_parse_stage_rejects_a_null_conv_id)."""
     from sqllog_analysis_spark.operators.routing import split_sink_contract
 
     rows = [
         ("c1", 0, "chat", dt.datetime(2025, 9, 16, 1), "fine"),
         ("c1", 1, "bogus_category", dt.datetime(2025, 9, 16, 2), "bad cat"),
         ("c2", 0, "slow_query", None, "null ts"),
-        (None, 0, "chat", dt.datetime(2025, 9, 16, 3), "null conv"),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, category string, ts timestamp, description string"
@@ -452,7 +375,7 @@ def test_sink_contract_split_isolates_poison_rows(spark):
     good, bad = split_sink_contract(df)
     assert [r.conv_id for r in good.collect()] == ["c1"]
     bad_rows = {r.path: r for r in bad.collect()}
-    assert set(bad_rows) == {"c1", "c2", "<unknown>"}
+    assert set(bad_rows) == {"c1", "c2"}
     assert all("写入约束错误" in r.error for r in bad_rows.values())
     assert bad.columns == ["path", "line", "error", "raw"]
 

@@ -325,3 +325,72 @@ def test_stream_transcript_pipeline_rejects_duplicate_turn_across_files(spark, t
     finally:
         q.stop()
         spark.conf.set(key, old)
+
+
+@pytest.mark.slow
+def test_stream_trigger_bounds_files_per_sink_directory(spark, tmp_path):
+    """A raw-log trigger whose micro-batch parses in more than 4 tasks
+    (16 files, read one per partition under a 1 KB split size) writes its
+    ``ingest_batch=`` records through the batch records writer: at most
+    files_per_partition (4) files per category=/dt= directory, where
+    writing straight from the parse partitions gives one file per parse
+    task per directory.  The rows equal the batch graph's."""
+    import glob
+    import os
+    from collections import Counter
+
+    from sqllog_analysis_spark.plans.pipeline import build
+    from sqllog_analysis_spark.sources.logfiles import read_sqllog_dir
+    from sqllog_analysis_spark.streaming.stream_pipeline import stream_sqllog_pipeline
+
+    def rec(sec, desc, exec_ms):
+        return (
+            f"2025-09-21 12:00:{sec:02d}.000 (EP[1] sess:NULL thrd:{sec} user:usr "
+            f"trxid:{sec} stmt:NULL) [SEL]: {desc}\n"
+            f"EXECTIME: {exec_ms}(ms) ROWCOUNT: 1 EXEC_ID: {sec}.\n"
+        )
+
+    # every file holds every category, all on the same dt (the file mtime)
+    text = (
+        rec(1, "select 1", 5)
+        + rec(2, "select 2", 1500)
+        + rec(3, "ERR[-7001] bad", 5)
+        + rec(4, "TOOL_CALL: lookup(1)", 5)
+    )
+    d = tmp_path / "fanin"
+    d.mkdir()
+    n_files = 16
+    for i in range(n_files):
+        (d / f"dmsql_{i}.log").write_text(text, encoding="utf-8")
+    out = str(tmp_path / "fanout")
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    q = stream_sqllog_pipeline(spark, str(d), out, str(tmp_path / "fanckpt")).start()
+    try:
+        q.processAllAvailable()
+        tracker = spark.sparkContext.statusTracker()
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup(str(q.runId))
+            for s in tracker.getJobInfo(j).stageIds
+            if tracker.getStageInfo(s) is not None
+        ]
+    finally:
+        q.stop()
+        spark.conf.set(key, old)
+    assert n_files in tasks  # the parse ran in one task per file
+
+    batches = glob.glob(os.path.join(out, "records_stream", "ingest_batch=*"))
+    assert len(batches) == 1
+    files = glob.glob(os.path.join(batches[0], "category=*", "dt=*", "*.parquet"))
+    per_dir = Counter(os.path.dirname(f) for f in files)
+    assert len(per_dir) == 4  # one dt, four categories
+    assert max(per_dir.values()) <= 4, per_dir.most_common(3)
+
+    cols = ["conv_id", "turn_idx", "rec_idx", "category", "ts"]
+    got = sorted(map(tuple, spark.read.parquet(batches[0]).select(cols).collect()))
+    g = build(spark, read_sqllog_dir(spark, str(d)))
+    want = sorted(map(tuple, g["routed"].select(cols).collect()))
+    assert got == want and len(got) == 4 * n_files
